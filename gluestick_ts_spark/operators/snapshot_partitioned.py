@@ -74,12 +74,12 @@ def read_store_buckets(spark: SparkSession, path: str) -> int | None:
     """The frozen bucket count, or None for stores created before the
     sidecar existed (callers then fall back to their own value, which
     legacy stores always passed consistently)."""
-    from ..sources.fs import read_hidden_text_file
+    from ..sources.fs import read_text_file
 
     if not hadoop_path_exists(spark, join_uri(path, _META_FILE)):
         return None
     return int(
-        json.loads(read_hidden_text_file(spark, join_uri(path, _META_FILE)))[
+        json.loads(read_text_file(spark, join_uri(path, _META_FILE)))[
             "n_buckets"
         ]
     )

@@ -125,12 +125,12 @@ def _bg_submit(fn, *args, **kwargs):
 
     Round 17: width is GATED on ``defaultParallelism`` instead of the
     r16 ``max_workers=2`` local[32] constant (the r16 verdict's own
-    recorded TODO): ``min(4, max(2, dp // 8))`` — 2 at <=16 cores
-    (matching the measured r16 optimum under contention), 3 at 32 (so
-    three independent eager sub-builds can be in flight where the
-    dependency graph has three — curation's rank/lp/per spine), capped
-    at 4 per guide §2.6 ("2-3 jobs in flight is plenty"). Sized once at
-    first use from the active session."""
+    recorded TODO): ``min(4, max(2, dp // 8))`` — 2 at <=23 cores
+    (matching the measured r16 optimum under contention), 3 at 24-31,
+    4 at 32 and above (so the independent eager sub-builds of
+    curation's rank/lp/per spine can all be in flight beside the main
+    thread), capped at 4 per guide §2.6 ("2-3 jobs in flight is
+    plenty"). Sized once at first use from the active session."""
     global _BG_POOL
     if _BG_POOL is None:
         from concurrent.futures import ThreadPoolExecutor
@@ -2591,8 +2591,8 @@ def q_curation_pipeline_docs(spark, sf, stages=None):
     # (construction + the url/domain/dup windows + the thin-flag
     # checkpoint + the adaptive cut) reads only the pinned staged
     # corpus — independent of the contamination leg until the final
-    # join. With the pool now 3 wide at this core count it builds on
-    # its own worker beside rank and lp, so its ~1 s checkpoint job
+    # join. With the pool 4 wide at 32 cores it builds on its own
+    # worker beside rank and lp, so its ~1 s checkpoint job
     # AND its py4j construction overlap the contamination leg's ~1 s
     # of pure expression building on the main thread (guide §2.6; the
     # r16 §22 attempt pooled contam instead and measured a wash —
@@ -3433,13 +3433,12 @@ def q_ngram_jaccard_adjacent(spark, sf):
     # no reuse (guide §2.3 shuffle fewer bytes). r16 reverted this on
     # sf0.1 wall-clock (the corpus fits one task; exchange bytes are
     # invisible); the 10x tiled fixture flips the verdict — see
-    # OPTIMIZATION_r17.md for the interleaved numbers. The joined
-    # shingle pair is staged through ONE struct (lambda parameters
-    # materialize) so each side tokenizes once per pair even though
-    # intersect+union both read it (project-level duplicates are
-    # folded by whole-stage codegen's subexpression elimination — the
-    # r16 §25 refined rule — so the post-join shingle subtrees
-    # evaluate once per pair side).
+    # OPTIMIZATION_r17.md for the interleaved numbers. ``sa``/``sb``
+    # are plain expressions that the projection below references
+    # several times (intersect, both sizes); whole-stage codegen's
+    # subexpression elimination folds the duplicated shingle and
+    # intersect subtrees (the r16 §25 refined rule), so each side
+    # shingles once per pair.
     _sh3 = shingles_expr(F.col("text"), 3)
     a = d.select(F.col("doc_id").alias("id_a"), F.col("text").alias("ta"))
     b = d.select(F.col("doc_id").alias("id_b"), F.col("text").alias("tb"))
@@ -3450,8 +3449,10 @@ def q_ngram_jaccard_adjacent(spark, sf):
     # |A ∪ B| = |A| + |B| − |A ∩ B| exactly (both sides are
     # array_distinct'd, no NULL elements) — the array_union hash-set
     # build per pair was a second full set pass for a number two
-    # size() calls derive from the intersect already computed
-    # (project-level CSE folds the duplicated intersect subtree).
+    # size() calls derive from the intersect already computed.
+    # Contract: documents.text is never NULL (pinned by
+    # test_ngram_jaccard_documents_text_not_null) — size(NULL) is -1,
+    # so a NULL side would yield a negative union, not a NULL ratio.
     union = (F.size(sa) + F.size(sb)).cast("double") - inter
     adjacent = j.select(
         F.lit("adjacent").alias("part"),
@@ -4462,8 +4463,9 @@ def q_bm25_search_docs(spark, sf, parts=("bm25", "rrf", "bm25idx")):
     (operators/search.py rrf_fuse, Cormack et al. 2009): the
     hybrid-search composition every lexical+vector stack ships. The
     ``bm25idx`` part probes a REAL persisted postings index
-    (write_bm25_index — term-bucketed postings + docfreq dirs, frozen
-    additive corpus stats, partition-pruned probe) built per run into
+    (write_bm25_index — a term-bucketed postings dir and frozen
+    additive corpus stats; the probe derives document frequencies and
+    prunes buckets at run time) built per run into
     a temp store; its rows must be IDENTICAL to the in-memory bm25
     part, so the oracle simply re-states the bm25 ranking under the
     'bm25idx' tag — an index-layout bug breaks the hash, not a side

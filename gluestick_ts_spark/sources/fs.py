@@ -18,7 +18,6 @@ __all__ = [
     "hadoop_path_exists",
     "join_uri",
     "write_text_file",
-    "read_hidden_text_file",
     "read_text_file",
     "rename_path",
     "delete_path",
@@ -94,24 +93,27 @@ def write_text_file(spark: SparkSession, path: str, content: str) -> None:
 
 
 def read_text_file(spark: SparkSession, path: str) -> str:
-    """Read a small text file from any Spark-readable filesystem.
+    """Read a small driver-side text file (store metadata, sidecars)
+    from any Spark-readable filesystem without a Spark job.
 
-    Goes through ``spark.read.text`` (one tiny job) rather than py4j
-    stream plumbing — py4j passes byte[] buffers by value, so a
-    Java-side ``InputStream.read(buf)`` never fills a Python
-    bytearray."""
-    rows = spark.read.text(path).collect()
-    return "\n".join(r.value for r in rows)
+    Streams the whole file through commons-io IOUtils (py4j passes the
+    byte[] back by value — a Java-side ``InputStream.read(buf)`` would
+    never fill a Python bytearray), so use it only for metadata-sized
+    files. ``_``/``.``-prefixed sidecars, which Spark's listing hides,
+    read like any other file. A missing file raises
+    ``AnalysisException``, as a ``spark.read`` of it would."""
+    from py4j.protocol import Py4JJavaError
+    from pyspark.errors import AnalysisException
 
-
-def read_hidden_text_file(spark: SparkSession, path: str) -> str:
-    """Read a small text file that Spark's listing treats as hidden
-    (``_``/``.``-prefixed sidecars inside data directories) —
-    ``spark.read.text`` silently returns nothing for those. Routes the
-    whole file through commons-io IOUtils (py4j passes the byte[] back
-    by value), so use only for driver-side metadata."""
     fs, hpath = _fs_and_path(spark, path)
-    stream = fs.open(hpath)
+    try:
+        stream = fs.open(hpath)
+    except Py4JJavaError as e:
+        if e.java_exception.getClass().getName() != "java.io.FileNotFoundException":
+            raise
+        raise AnalysisException(
+            message=f"[PATH_NOT_FOUND] Path does not exist: {path}."
+        ) from None
     try:
         data = bytes(spark._jvm.org.apache.commons.io.IOUtils.toByteArray(stream))
     finally:

@@ -209,3 +209,27 @@ def test_every_module_reachable_or_exempt():
             assert val, mod
         else:
             assert isinstance(val, str) and len(val) > 20, mod
+
+
+def test_ngram_jaccard_documents_text_not_null(sf_dir):
+    """``ngram_jaccard_adjacent`` derives |A ∪ B| as |A| + |B| − |A ∩ B|,
+    and ``size(NULL)`` is -1, so the identity needs non-NULL text: pin
+    that contract on every documents fixture the oracle runs at."""
+    import os
+
+    import duckdb
+
+    root = os.path.dirname(sf_dir.rstrip("/"))
+    checked = 0
+    for sf in sorted({os.path.basename(sf_dir.rstrip("/")), "sf0.001", "sf0.01"}):
+        path = os.path.join(root, sf, "documents.parquet")
+        if not os.path.exists(path):
+            continue
+        if os.path.isdir(path):
+            path = os.path.join(path, "*.parquet")
+        n_null = duckdb.sql(
+            f"SELECT count(*) FROM read_parquet('{path}') WHERE text IS NULL"
+        ).fetchone()[0]
+        assert n_null == 0, path
+        checked += 1
+    assert checked

@@ -109,10 +109,10 @@ def test_rrf_fuse_hand_computed(spark):
 
 def test_bm25_index_store_build_probe_append(spark, tmp_path):
     """The persisted BM25 index: probes equal the in-memory bm25_topk
-    over the same corpus; the postings/docfreq scans are
-    partition-pruned to the query vocabulary's buckets; appended
-    documents become scoreable with exactly-updated corpus stats
-    (n_docs/sum_dl additive, affected df buckets recomputed)."""
+    over the same corpus; the postings scan is partition-pruned to
+    the query vocabulary's buckets; appended documents become
+    scoreable with exactly-updated corpus stats (n_docs/sum_dl
+    additive, df derived at probe time)."""
     import re
 
     from pyspark.sql import functions as F
@@ -314,3 +314,213 @@ def test_bm25_index_cjk_grain_frozen(spark, tmp_path):
     assert {
         (r.query_id, r.rank): (r.doc_id, r.score) for r in ok.collect()
     } == idx
+
+
+def _ranking(df):
+    return sorted(
+        (r.query_id, r.doc_id, round(r.score, 6), r.rank) for r in df.collect()
+    )
+
+
+_IDX_DOCS = [
+    (1, "the quick brown fox jumps over the lazy dog"),
+    (2, "a quick movement of the enemy will jeopardize five gunboats"),
+    (3, "brown foxes are quick and dogs are lazy"),
+    (4, "the five boxing wizards jump quickly"),
+    (5, "lazy afternoons with a brown dog and a quick fox"),
+    (6, "quick quick quick"),
+]
+
+
+def test_bm25_index_probe_equals_topk_edge_queries(spark, tmp_path):
+    """The probe derives df inside its query-keyed exchange; it must
+    still equal the in-memory ranking for a term shared across
+    queries, a repeated query term (qtf 2), a duplicated query_id (df
+    counts documents, not rows) and after two successive appends."""
+    from gluestick_ts_spark.operators.search import (
+        append_bm25_index,
+        bm25_index_topk,
+        write_bm25_index,
+    )
+
+    docs = spark.createDataFrame(_IDX_DOCS, "doc_id long, text string")
+    queries = spark.createDataFrame(
+        [
+            (1, "quick brown"),
+            (2, "quick wizards"),  # 'quick' shared across queries
+            (3, "lazy lazy dog"),  # qtf 2
+            (4, "brown fox"),
+            (4, "quick dog"),  # duplicated query_id
+            (5, "zzz"),  # no match
+        ],
+        "query_id long, query_text string",
+    )
+    path = str(tmp_path / "bm_edge")
+    write_bm25_index(docs, path, num_buckets=4)
+    assert _ranking(bm25_index_topk(queries, path, k=4)) == _ranking(
+        bm25_topk(docs, queries, k=4)
+    )
+    corpus = docs
+    for batch in (
+        [(7, "quick lazy wizards"), (8, "brown brown dog")],
+        [(9, "five quick foxes"), (10, "")],
+    ):
+        extra = spark.createDataFrame(batch, "doc_id long, text string")
+        append_bm25_index(extra, path)
+        corpus = corpus.unionByName(extra)
+        assert _ranking(bm25_index_topk(queries, path, k=4)) == _ranking(
+            bm25_topk(corpus, queries, k=4)
+        )
+
+
+def test_bm25_index_probe_is_lazy_and_runtime_pruned(spark, tmp_path):
+    """Building the probe fires no Spark job (meta read off the Hadoop
+    FS, no pinned query terms, no bucket collect); the postings scan is
+    pruned at run time by dynamic partition pruning off the broadcast
+    query terms; with DPP disabled the scan reads every bucket and the
+    ranking is unchanged."""
+    from gluestick_ts_spark.operators.search import (
+        bm25_index_topk,
+        write_bm25_index,
+    )
+
+    docs = spark.createDataFrame(_IDX_DOCS, "doc_id long, text string")
+    queries = spark.createDataFrame(
+        [(1, "quick fox"), (2, "five wizards")], "query_id long, query_text string"
+    )
+    path = str(tmp_path / "bm_lazy")
+    write_bm25_index(docs, path, num_buckets=8)
+
+    sc = spark.sparkContext
+    sc.setJobGroup("bm25-probe-build", "plan build only")
+    try:
+        probe = bm25_index_topk(queries, path, k=3)
+        probe.schema
+    finally:
+        sc.setJobGroup("", "")
+    assert sc.statusTracker().getJobIdsForGroup("bm25-probe-build") == []
+
+    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
+        "formatted"
+    )
+    plan = probe._jdf.queryExecution().explainString(mode)
+    assert "dynamicpruningexpression(bucket" in plan, plan[:3000]
+    want = _ranking(bm25_topk(docs, queries, k=3))
+    assert _ranking(probe) == want
+
+    key = "spark.sql.optimizer.dynamicPartitionPruning.enabled"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        unpruned = bm25_index_topk(queries, path, k=3)
+        uplan = unpruned._jdf.queryExecution().explainString(mode)
+        assert "dynamicpruningexpression" not in uplan
+        assert _ranking(unpruned) == want
+    finally:
+        spark.conf.set(key, prev)
+
+
+def test_bm25_index_legacy_docfreq_layout_still_probes_and_appends(
+    spark, tmp_path
+):
+    """An index from the older layout — a ``docfreq/`` store beside the
+    postings and ``df_schema`` in its meta — probes and appends exactly
+    like a current one; the extra directory is simply never read."""
+    import json
+
+    from gluestick_ts_spark.operators.search import (
+        append_bm25_index,
+        bm25_index_topk,
+        read_bm25_index_meta,
+        write_bm25_index,
+    )
+    from gluestick_ts_spark.sources.fs import write_text_file
+
+    docs = spark.createDataFrame(_IDX_DOCS, "doc_id long, text string")
+    queries = spark.createDataFrame(
+        [(1, "quick brown dog"), (2, "five wizards")],
+        "query_id long, query_text string",
+    )
+    extra = spark.createDataFrame(
+        [(7, "wizards of the quick brown variety")], "doc_id long, text string"
+    )
+    cur, old = str(tmp_path / "bm_cur"), str(tmp_path / "bm_old")
+    for p in (cur, old):
+        write_bm25_index(docs, p, num_buckets=4)
+    # the older writer's extra store: per-(term, bucket) df rows
+    dfr = (
+        spark.read.parquet(old + "/postings")
+        .groupBy("term", "bucket")
+        .agg(F.count("*").cast("long").alias("df"))
+    )
+    dfr.write.partitionBy("bucket").parquet(old + "/docfreq")
+    meta = read_bm25_index_meta(spark, old)
+    meta["df_schema"] = json.loads(dfr.schema.json())
+    write_text_file(spark, old + "/store_meta.json", json.dumps(meta))
+
+    assert _ranking(bm25_index_topk(queries, old, k=3)) == _ranking(
+        bm25_index_topk(queries, cur, k=3)
+    )
+    for p in (cur, old):
+        append_bm25_index(extra, p)
+    got = _ranking(bm25_index_topk(queries, old, k=3))
+    assert got == _ranking(bm25_index_topk(queries, cur, k=3))
+    assert got == _ranking(bm25_topk(docs.unionByName(extra), queries, k=3))
+
+
+def test_read_text_file_is_a_driver_side_read(spark, tmp_path):
+    """The one metadata reader: a multi-line file round-trips exactly,
+    a ``_``-prefixed sidecar (hidden from Spark's listing) reads like
+    any other file, a missing file raises AnalysisException — and none
+    of it runs a Spark job."""
+    from pyspark.errors import AnalysisException
+
+    from gluestick_ts_spark.sources.fs import read_text_file, write_text_file
+
+    body = '{\n  "n": 1,\n  "s": "é"\n}\n'
+    plain = "file://" + str(tmp_path / "meta.json")
+    hidden = str(tmp_path / "_sidecar.json")
+    sc = spark.sparkContext
+    sc.setJobGroup("text-read", "driver-side reads only")
+    try:
+        write_text_file(spark, plain, body)
+        write_text_file(spark, hidden, "x\ny")
+        assert read_text_file(spark, plain) == body
+        assert read_text_file(spark, hidden) == "x\ny"
+        with pytest.raises(AnalysisException):
+            read_text_file(spark, str(tmp_path / "missing.json"))
+    finally:
+        sc.setJobGroup("", "")
+    assert sc.statusTracker().getJobIdsForGroup("text-read") == []
+
+
+def test_bm25_index_write_error_does_not_wait_for_stats_job(spark):
+    """write_bm25_index runs its corpus-stats aggregate concurrently
+    with the postings write. When the write raises, the stats job is
+    cancelled and the write's own error surfaces at once — not after
+    the stats job has run to completion."""
+    import time
+
+    from gluestick_ts_spark.operators.search import _with_concurrent_stats
+
+    slow = F.udf(lambda v: (time.sleep(0.5), v)[1], "long")
+    stats_job = spark.range(0, 200, 1, 4).select(slow("id").alias("x"))
+    tracker = spark.sparkContext.statusTracker()
+
+    def failing_write():
+        deadline = time.monotonic() + 60
+        while not tracker.getActiveJobsIds() and time.monotonic() < deadline:
+            time.sleep(0.05)
+        raise RuntimeError("postings write failed")
+
+    t0 = time.monotonic()
+    with pytest.raises(RuntimeError, match="postings write failed"):
+        _with_concurrent_stats(
+            spark, failing_write, lambda: stats_job.agg(F.sum("x")).first()
+        )
+    # uncancelled, the stats job needs 200 x 0.5 s / 4 slots = 25 s
+    deadline = time.monotonic() + 15
+    while tracker.getActiveJobsIds() and time.monotonic() < deadline:
+        time.sleep(0.1)
+    assert tracker.getActiveJobsIds() == []
+    assert time.monotonic() - t0 < 20
