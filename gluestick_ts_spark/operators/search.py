@@ -359,18 +359,14 @@ def write_bm25_index(
     post = term_postings(docs, id_col, text_col, cjk_route, cjk_n).withColumn(
         "bucket", _term_bucket(num_buckets)
     )
-    n_docs, sum_dl = _with_concurrent_stats(
-        docs.sparkSession,
-        # repartition ON the bucket key before the partitioned write:
-        # each bucket lands wholly in one task, so the layout is ~1
-        # file/bucket instead of tasks x buckets tiny files — the
-        # probe's pruned scan opens one file per probed bucket
-        lambda: post.repartition(num_buckets, "bucket")
-        .write.mode(mode)
-        .partitionBy("bucket")
-        .parquet(join_uri(path, _BM25_POSTINGS_DIR)),
-        lambda: _corpus_stats(docs, id_col, text_col, cjk_route, cjk_n),
-    )
+    # repartition ON the bucket key before the partitioned write: each
+    # bucket lands wholly in one task, so the layout is ~1 file/bucket
+    # instead of tasks x buckets tiny files — the probe's pruned scan
+    # opens one file per probed bucket
+    post.repartition(num_buckets, "bucket").write.mode(mode).partitionBy(
+        "bucket"
+    ).parquet(join_uri(path, _BM25_POSTINGS_DIR))
+    n_docs, sum_dl = _corpus_stats(docs, id_col, text_col, cjk_route, cjk_n)
     meta = {
         "num_buckets": num_buckets,
         # the term grain is part of the store's FROZEN contract, like
@@ -383,40 +379,6 @@ def write_bm25_index(
         "postings_schema": json.loads(post.schema.json()),
     }
     write_text_file(docs.sparkSession, join_uri(path, _BM25_META_FILE), json.dumps(meta))
-
-
-def _with_concurrent_stats(spark, write, stats):
-    """Run ``write()`` while ``stats()`` — the corpus-stats aggregate, a
-    second tokenize pass that reads only ``docs`` — runs as a concurrent
-    job on a scoped worker thread; return the stats. Interleaved A/B on
-    4 cores (1.65k docs of 60–140 words, 16 buckets): index write 0.955
-    -> 0.877 s median, faster in 17 of 20 pairs, 4 jobs either way. The
-    worker inherits the caller's job group and tags; if the write
-    raises, the stats job is cancelled by its own tag so the write's
-    error surfaces at once instead of after a corpus-sized aggregate."""
-    import uuid
-    from concurrent.futures import ThreadPoolExecutor
-
-    sc = spark.sparkContext
-    tag = f"gs_bm25_stats_{uuid.uuid4().hex}"
-    props = sc._jsc.sc().getLocalProperties().clone()
-
-    def tagged_stats():
-        sc._jsc.sc().setLocalProperties(props)
-        sc.addJobTag(tag)
-        return stats()
-
-    pool = ThreadPoolExecutor(max_workers=1, thread_name_prefix="gs_bm25_stats")
-    try:
-        fut = pool.submit(tagged_stats)
-        try:
-            write()
-        except BaseException:
-            sc.cancelJobsWithTag(tag)
-            raise
-        return fut.result()
-    finally:
-        pool.shutdown(wait=False, cancel_futures=True)
 
 
 def _corpus_stats(

@@ -492,35 +492,3 @@ def test_read_text_file_is_a_driver_side_read(spark, tmp_path):
     finally:
         sc.setJobGroup("", "")
     assert sc.statusTracker().getJobIdsForGroup("text-read") == []
-
-
-def test_bm25_index_write_error_does_not_wait_for_stats_job(spark):
-    """write_bm25_index runs its corpus-stats aggregate concurrently
-    with the postings write. When the write raises, the stats job is
-    cancelled and the write's own error surfaces at once — not after
-    the stats job has run to completion."""
-    import time
-
-    from gluestick_ts_spark.operators.search import _with_concurrent_stats
-
-    slow = F.udf(lambda v: (time.sleep(0.5), v)[1], "long")
-    stats_job = spark.range(0, 200, 1, 4).select(slow("id").alias("x"))
-    tracker = spark.sparkContext.statusTracker()
-
-    def failing_write():
-        deadline = time.monotonic() + 60
-        while not tracker.getActiveJobsIds() and time.monotonic() < deadline:
-            time.sleep(0.05)
-        raise RuntimeError("postings write failed")
-
-    t0 = time.monotonic()
-    with pytest.raises(RuntimeError, match="postings write failed"):
-        _with_concurrent_stats(
-            spark, failing_write, lambda: stats_job.agg(F.sum("x")).first()
-        )
-    # uncancelled, the stats job needs 200 x 0.5 s / 4 slots = 25 s
-    deadline = time.monotonic() + 15
-    while tracker.getActiveJobsIds() and time.monotonic() < deadline:
-        time.sleep(0.1)
-    assert tracker.getActiveJobsIds() == []
-    assert time.monotonic() - t0 < 20
