@@ -43,6 +43,12 @@ from ..functions.text import (
     tokens_expr,
 )
 from ..functions.vectors import cosine_similarity_expr
+from ..sources.store import (
+    Store,
+    _exclude_batch_filter,
+    compact_partitioned,
+    flat_store,
+)
 from .snapshot import keep_last_dedup
 
 __all__ = [
@@ -69,8 +75,6 @@ __all__ = [
     "compact_fingerprint_store",
     "compact_flat_store",
     "compact_count_store",
-    "recover_flat_store",
-    "recover_store_data",
     "stamp_signing",
     "stamp_width_fold",
     "dedup_minhash_incremental_bucketed",
@@ -861,12 +865,13 @@ def dedup_minhash_incremental(
 # Bucketed signature store: the 100 TB layout for incremental dedup
 # ---------------------------------------------------------------------------
 
-# no leading underscore: Spark's file index treats _-prefixed names as
-# hidden and would refuse to read the meta back; data lives under
-# banded/, so the sibling meta file never pollutes a data scan
-_STORE_META_FILE = "store_meta.json"
 _STORE_DATA_DIR = "banded"
 _STORE_HOT_DIR = "hot_bands"
+
+
+def _banded_store(path: str) -> Store:
+    """Signature and fingerprint stores: ``banded/`` + ``store_meta.json``."""
+    return Store(path, _STORE_DATA_DIR)
 
 
 def minhash_signing(
@@ -1012,7 +1017,7 @@ def _write_hot_bands(spark, path: str, hot_band_min: int) -> None:
 
     meta = read_signature_store_meta(spark, path)
     banded = spark.read.schema(StructType.fromJson(meta["schema"])).parquet(
-        join_uri(path, _STORE_DATA_DIR)
+        _banded_store(path).data_path(meta)
     )
     hot = (
         banded.groupBy("band", "band_hash")
@@ -1042,7 +1047,9 @@ def write_signature_store(
     ``sigs`` is ``(id, signature)`` from ``minhash_signatures``; the
     banding parameters are frozen into ``<path>/store_meta.json`` so
     every later batch bands identically (mismatched banding makes
-    collisions meaningless). Store layout:
+    collisions meaningless). Store layout (``sources/store.py``
+    protocol: an overwrite of an existing store publishes a new
+    version):
 
     - ``<path>/banded/bucket=<k>/*.parquet`` — (id, signature, band,
       band_hash) rows, partitioned by ``bucket = pmod(band_hash,
@@ -1064,7 +1071,7 @@ def write_signature_store(
       hot list until the next compact, never wrongly sit on it unless
       the store shrank).
 
-    ``signing`` (round 15, a ``minhash_signing(...)`` dict) freezes the
+    ``signing`` (a ``minhash_signing(...)`` dict) freezes the
     SIGNING RECIPE — shingle grain (word ``shingle_n`` / routed char
     ``cjk_routed``+``cjk_shingle_n``), ``seed``, ``num_hashes``,
     ``hash_family`` — into the meta; the incremental entry points and
@@ -1079,8 +1086,6 @@ def write_signature_store(
     appends from one sequential ingest loop; concurrent writers to one
     store are not supported.
     """
-    from ..sources.fs import join_uri, write_text_file
-
     spark = sigs.sparkSession
     if signing is not None:
         unknown = [k for k in signing if k not in _SIGNING_KEYS]
@@ -1103,12 +1108,6 @@ def write_signature_store(
     nb = max(1, min(num_bands, sig_len))
     rows_per_band = max(1, sig_len // nb)
     banded = _banded_store_rows(sigs, nb, rows_per_band, num_buckets)
-    # repartition ON the bucket key: ~1 file/bucket instead of
-    # tasks x buckets tiny files — the pruned candidate scan opens
-    # bucket-count files from day one, not only after compaction
-    banded.repartition(num_buckets, "bucket").write.mode(mode).partitionBy(
-        "bucket"
-    ).parquet(join_uri(path, _STORE_DATA_DIR))
     meta: dict = {
         "sig_len": sig_len,
         "num_bands": nb,
@@ -1127,16 +1126,25 @@ def write_signature_store(
         meta["signing"] = signing
     if hot_band_min is not None:
         meta["hot_band_min"] = int(hot_band_min)
-    write_text_file(spark, join_uri(path, _STORE_META_FILE), json.dumps(meta))
+
+    def write(dst: str, mode: str) -> None:
+        # repartition ON the bucket key: ~1 file/bucket instead of
+        # tasks x buckets tiny files — the pruned candidate scan opens
+        # bucket-count files from day one, not only after compaction
+        banded.repartition(num_buckets, "bucket").write.mode(
+            mode
+        ).partitionBy("bucket").parquet(dst)
+
+    store = _banded_store(path)
+    store.publish(spark, meta, write, store.read_meta(spark), mode)
     if hot_band_min is not None:
         _write_hot_bands(spark, path, int(hot_band_min))
 
 
 def read_signature_store_meta(spark, path: str) -> dict:
-    """Banding parameters frozen at store-creation time."""
-    from ..sources.fs import join_uri, read_text_file
-
-    return json.loads(read_text_file(spark, join_uri(path, _STORE_META_FILE)))
+    """The committed meta of a signature or fingerprint store (banding
+    parameters, frozen schema and recipe, data version)."""
+    return _banded_store(path).require_meta(spark)
 
 
 def append_signature_store(
@@ -1176,8 +1184,6 @@ def append_signature_store(
                 f"build the dict with minhash_signing(...) ({_SIGNING_KEYS})"
             )
         _check_signing(meta, minhash_signing(**signing), "append_signature_store")
-    from ..sources.fs import join_uri
-
     nb = meta["num_bands"]
     rows_per_band = max(1, meta["sig_len"] // nb)
     banded = _banded_store_rows(sigs, nb, rows_per_band, meta["num_buckets"])
@@ -1188,7 +1194,7 @@ def append_signature_store(
             f"append_signature_store: sigs lacks frozen store columns {missing}"
         )
     banded.write.mode("append").partitionBy("bucket").parquet(
-        join_uri(path, _STORE_DATA_DIR)
+        _banded_store(path).data_path(meta)
     )
 
 
@@ -1211,7 +1217,7 @@ def write_fingerprint_store(
     ``fps`` beyond ``fp`` (e.g. a streaming ``batch_id`` provenance
     stamp) are preserved and frozen into the store schema.
 
-    ``width_fold`` (round 15) freezes the FINGERPRINTING RECIPE: did
+    ``width_fold`` freezes the FINGERPRINTING RECIPE: did
     ``fps`` come from ``fingerprint_expr(width_fold=True)``? Folded
     and unfolded fingerprints are incomparable keys, so the
     incremental/append entry points assert their batch's fold against
@@ -1221,8 +1227,6 @@ def write_fingerprint_store(
     here. ``extra_meta`` merges additional frozen keys into the meta
     (used by the streaming curation store to freeze its routing
     config); it may not shadow the store's own keys."""
-    from ..sources.fs import join_uri, write_text_file
-
     spark = fps.sparkSession
     extras = [c for c in fps.columns if c != "fp"]
     rows = fps.select(
@@ -1238,17 +1242,21 @@ def write_fingerprint_store(
     if extra_meta:
         # validated BEFORE the data write: failing after an overwrite
         # would leave a data dir with no readable meta
-        clash = sorted(set(extra_meta) & set(meta))
+        clash = sorted(set(extra_meta) & (set(meta) | {"version"}))
         if clash:
             raise ValueError(
                 f"write_fingerprint_store: extra_meta shadows store keys {clash}"
             )
         meta.update(extra_meta)
-    # ~1 file/bucket initial layout (write_signature_store's rationale)
-    rows.repartition(num_buckets, "bucket").write.mode(mode).partitionBy(
-        "bucket"
-    ).parquet(join_uri(path, _STORE_DATA_DIR))
-    write_text_file(spark, join_uri(path, _STORE_META_FILE), json.dumps(meta))
+
+    def write(dst: str, mode: str) -> None:
+        # ~1 file/bucket initial layout (write_signature_store's rationale)
+        rows.repartition(num_buckets, "bucket").write.mode(mode).partitionBy(
+            "bucket"
+        ).parquet(dst)
+
+    store = _banded_store(path)
+    store.publish(spark, meta, write, store.read_meta(spark), mode)
 
 
 def append_fingerprint_store(
@@ -1262,8 +1270,6 @@ def append_fingerprint_store(
     fingerprinting recipe and is asserted against the frozen meta
     (mismatch raises); None skips the check — the fingerprints are
     pre-computed, so the store cannot re-derive it."""
-    from ..sources.fs import join_uri
-
     meta = read_signature_store_meta(fps.sparkSession, path)
     if width_fold is None and meta.get("width_fold") is not None:
         logging.getLogger(__name__).warning(
@@ -1287,65 +1293,45 @@ def append_fingerprint_store(
         F.pmod(F.xxhash64("fp"), F.lit(meta["num_buckets"])).alias("bucket"),
     )
     rows.write.mode("append").partitionBy("bucket").parquet(
-        join_uri(path, _STORE_DATA_DIR)
+        _banded_store(path).data_path(meta)
     )
 
 
 def stamp_signing(spark, store_path: str, signing: dict) -> None:
-    """Migration helper for LEGACY minhash stores (seeded before round
-    15 froze signing recipes): write the attested recipe into the
-    store's meta WITHOUT re-banding — the signatures in a legacy store
-    are fine; only the meta record is missing, and the frozen-recipe
-    guard would otherwise hard-fail an existing routed pipeline on
-    upgrade. Handles BOTH durable layouts: a bucketed store
-    (``store_meta.json`` present) gets the ``signing`` key merged into
-    its meta; a flat streaming store gets the ``flat_signing.json``
-    sidecar ``stream_dedup_incremental`` asserts. Refuses to overwrite
-    a DIFFERING frozen recipe — that would launder a real mismatch
-    into an attested one."""
-    from ..sources.fs import (
-        hadoop_path_exists,
-        join_uri,
-        write_text_file,
-    )
+    """Attest the signing recipe of a legacy minhash store (one seeded
+    before recipes were frozen) without re-banding: a bucketed store
+    gets ``signing`` merged into its meta, a flat streaming store gets
+    the ``flat_signing.json`` sidecar ``stream_dedup_incremental``
+    asserts. Refuses to overwrite a differing frozen recipe."""
+    from ..sources.fs import join_uri
+    from ..sources.store import commit_meta, read_meta
 
     signing = minhash_signing(**signing)
-    meta_path = join_uri(store_path, _STORE_META_FILE)
-    if hadoop_path_exists(spark, meta_path):
-        meta = read_signature_store_meta(spark, store_path)
+    store = _banded_store(store_path)
+    meta = store.read_meta(spark)
+    if meta is not None:
         frozen = meta.get("signing")
-        if frozen is not None:
-            if frozen != signing:
-                raise ValueError(
-                    f"stamp_signing: store already froze {frozen}, "
-                    f"differing from {signing} — stamping over it would "
-                    "attest incomparable signatures as comparable."
-                )
+        if frozen is None:
+            store.commit(spark, {**meta, "signing": signing})
             return
-        meta["signing"] = signing
-        write_text_file(spark, meta_path, json.dumps(meta))
-        return
-    flat_path = join_uri(store_path, "flat_signing.json")
-    if hadoop_path_exists(spark, flat_path):
-        from ..sources.fs import read_text_file
-
-        frozen = json.loads(read_text_file(spark, flat_path))
-        if frozen != signing:
-            raise ValueError(
-                f"stamp_signing: store already froze {frozen}, differing "
-                f"from {signing} — stamping over it would attest "
-                "incomparable signatures as comparable."
-            )
-        return
-    write_text_file(spark, flat_path, json.dumps(signing))
+    else:
+        flat_path = join_uri(store_path, "flat_signing.json")
+        frozen = read_meta(spark, flat_path)
+        if frozen is None:
+            commit_meta(spark, flat_path, signing)
+            return
+    if frozen != signing:
+        raise ValueError(
+            f"stamp_signing: store already froze {frozen}, differing "
+            f"from {signing} — stamping over it would attest "
+            "incomparable signatures as comparable."
+        )
 
 
 def stamp_width_fold(spark, store_path: str, width_fold: bool) -> None:
     """Fingerprint-store twin of ``stamp_signing``: attest a legacy
     fingerprint store's ``width_fold`` recipe into its meta without
     re-bucketing. Refuses to FLIP an explicitly frozen value."""
-    from ..sources.fs import join_uri, write_text_file
-
     meta = read_signature_store_meta(spark, store_path)
     frozen = meta.get("width_fold")
     if frozen is not None:
@@ -1357,32 +1343,8 @@ def stamp_width_fold(spark, store_path: str, width_fold: bool) -> None:
                 "opposite would attest them as comparable."
             )
         return
-    meta["width_fold"] = bool(width_fold)
-    write_text_file(
-        spark, join_uri(store_path, _STORE_META_FILE), json.dumps(meta)
-    )
-
-
-def _exclude_batch_filter(store: DataFrame, schema, exclude_batch_id):
-    """Replay-exclusion filter shared by the bucketed stores: drop
-    store rows stamped with the CURRENT batch id — on a crash-replay
-    they are this very batch's own earlier append, and deduping
-    against them would silently kill every survivor (emitting them all
-    as duplicates). Requires the store to have been seeded with a
-    ``batch_id`` column; a store without one cannot distinguish its
-    own replay from history, so asking for exclusion there is an
-    error, not a no-op."""
-    if exclude_batch_id is None:
-        return store
-    if "batch_id" not in [f.name for f in schema.fields]:
-        raise ValueError(
-            "exclude_batch_id requires a store seeded with a batch_id "
-            "column (stamp appends with F.lit(batch_id))"
-        )
-    return store.where(
-        F.coalesce(
-            F.col("batch_id") != F.lit(int(exclude_batch_id)), F.lit(True)
-        )
+    _banded_store(store_path).commit(
+        spark, {**meta, "width_fold": bool(width_fold)}
     )
 
 
@@ -1409,10 +1371,7 @@ def dedup_exact_incremental_bucketed(
     duplicate)."""
     from pyspark.sql.types import StructType
 
-    from ..sources.fs import join_uri
-
     spark = new_df.sparkSession
-    recover_store_data(spark, store_path)  # heal a crashed compaction
     meta = read_signature_store_meta(spark, store_path)
     _check_width_fold(meta, width_fold, "dedup_exact_incremental_bucketed")
     fp = "__gs_fp"
@@ -1426,7 +1385,7 @@ def dedup_exact_incremental_bucketed(
     store_schema = StructType.fromJson(meta["schema"])
     store = (
         spark.read.schema(store_schema)
-        .parquet(join_uri(store_path, _STORE_DATA_DIR))
+        .parquet(_banded_store(store_path).data_path(meta))
         .where(F.col("bucket").isin(batch_buckets))
     )
     store = _exclude_batch_filter(store, store_schema, exclude_batch_id)
@@ -1440,87 +1399,6 @@ def dedup_exact_incremental_bucketed(
         survivor_fps = survivor_fps.localCheckpoint(eager=True)
         append_fingerprint_store(survivor_fps, store_path, width_fold=width_fold)
     return out, survivor_fps
-
-
-def recover_store_data(
-    spark, path: str, data_dir: str = _STORE_DATA_DIR
-) -> bool:
-    """Bucketed-store twin of :func:`recover_flat_store` (round 16): a
-    ``_compact_store_data`` swap that died between its two renames
-    leaves the data dir ABSENT with the originals parked in
-    ``.pre-compact``. Unlike the flat stores this failure was LOUD
-    (readers raise on the missing path, never silently-empty), but it
-    required a manual rename to heal — this restores the parked data
-    (discarding the compaction work, never the keys) and clears a
-    stale ``.compact-tmp``. Called by the bucketed readers and by the
-    compactor itself, so a crashed compaction heals on next touch."""
-    from ..sources.fs import delete_path, hadoop_path_exists, join_uri, rename_path
-
-    data = join_uri(path, data_dir)
-    pre = data + ".pre-compact"
-    recovered = False
-    if not hadoop_path_exists(spark, data) and hadoop_path_exists(spark, pre):
-        rename_path(spark, pre, data)
-        recovered = True
-    delete_path(spark, data + ".compact-tmp")
-    return recovered
-
-
-def _compact_store_data(
-    spark,
-    path: str,
-    transform=None,
-    data_dir: str = _STORE_DATA_DIR,
-    part_col: str = "bucket",
-    schema=None,
-) -> None:
-    """Shared compaction body for every partitioned store (signature /
-    fingerprint / semantic): read the data dir with the frozen meta
-    schema, optionally ``transform`` the relation, repartition by the
-    partition column so each partition dir lands in exactly one task
-    (→ exactly one output file per dir), write to a sibling tmp dir,
-    then swap via Hadoop-FS renames. Finally, the streaming replay
-    markers under ``<path>/batches/`` are dropped: compaction runs
-    between batches with the stream stopped and committed, so every
-    marker is stale (markers only ever protect the last UNCOMMITTED
-    batch) — leaving them would accrete one tiny object per
-    micro-batch forever.
-
-    Same single-writer contract as appends: run between ingest batches,
-    not concurrently with one. The swap is two renames — atomic enough
-    on HDFS/local; on S3-style stores rename is copy+delete, so a crash
-    mid-swap can leave the store missing (the ``.pre-compact`` dir then
-    holds the original data for manual recovery).
-    """
-    from pyspark.sql.types import StructType
-
-    from ..sources.fs import delete_path, hadoop_path_exists, join_uri, rename_path
-
-    recover_store_data(spark, path, data_dir)  # heal a prior crash first
-    if schema is None:
-        meta = read_signature_store_meta(spark, path)
-        schema = StructType.fromJson(meta["schema"])
-    data = join_uri(path, data_dir)
-    tmp = join_uri(path, data_dir + ".compact-tmp")
-    old = join_uri(path, data_dir + ".pre-compact")
-    df = spark.read.schema(schema).parquet(data)
-    if transform is not None:
-        df = transform(df)
-    df.repartition(part_col).write.mode("overwrite").partitionBy(
-        part_col
-    ).parquet(tmp)
-    if hadoop_path_exists(spark, old):
-        delete_path(spark, old)
-    if not rename_path(spark, data, old):
-        raise IOError(f"compact: could not move {data} aside")
-    if not rename_path(spark, tmp, data):
-        # roll back so the store stays readable
-        rename_path(spark, old, data)
-        raise IOError(f"compact: could not move {tmp} into place")
-    delete_path(spark, old)
-    markers = join_uri(path, "batches")
-    if hadoop_path_exists(spark, markers):
-        delete_path(spark, markers)
 
 
 def fingerprint_store_membership(
@@ -1546,10 +1424,7 @@ def fingerprint_store_membership(
     """
     from pyspark.sql.types import StructType
 
-    from ..sources.fs import join_uri
-
     spark = fps.sparkSession
-    recover_store_data(spark, store_path)  # heal a crashed compaction
     meta = read_signature_store_meta(spark, store_path)
     schema = StructType.fromJson(meta["schema"])
     batch = (
@@ -1563,7 +1438,7 @@ def fingerprint_store_membership(
     buckets = [r[0] for r in batch.select("__bucket").distinct().collect()]
     store = (
         spark.read.schema(schema)
-        .parquet(join_uri(store_path, _STORE_DATA_DIR))
+        .parquet(_banded_store(store_path).data_path(meta))
         .where(F.col("bucket").isin(buckets))
     )
     store = _exclude_batch_filter(store, schema, exclude_batch_id)
@@ -1575,48 +1450,29 @@ def fingerprint_store_membership(
 
 
 def compact_signature_store(spark, path: str) -> None:
-    """Rewrite the bucketed signature store to one part file per bucket.
-
-    Every ``append_signature_store`` call adds a new part file to each
-    bucket dir it touches, so after N ingest batches a bucket holds up
-    to N small files — at which point listing and opening files, not
-    reading bytes, dominates the candidate-join scan. Compaction is the
-    standard maintenance pass (see ``_compact_store_data`` for the
-    swap/durability contract). Full-row duplicates — a crash between a
-    streaming append and its marker write re-appends the same banded
-    rows — are reclaimed here, same as the sibling stores.
-    """
-    _compact_store_data(spark, path, transform=lambda df: df.dropDuplicates())
-    # compaction is the natural refresh point for the hot-band sidecar
-    # (appends leave it stale-conservative; see write_signature_store)
+    """Rewrite the bucketed signature store as one part file per bucket
+    with full-row duplicates (a crash-window double append) dropped,
+    publish it as a new version, and refresh the hot-band sidecar."""
+    compact_partitioned(spark, _banded_store(path), "bucket")
     meta = read_signature_store_meta(spark, path)
     if meta.get("hot_band_min") is not None:
         _write_hot_bands(spark, path, int(meta["hot_band_min"]))
 
 
-def recover_flat_store(spark, store_dir: str, data_name: str) -> bool:
-    """Crash recovery for ``compact_flat_store``'s rename swap: a crash
-    between ``rename(data -> .pre-compact)`` and ``rename(.compact-tmp
-    -> data)`` leaves the data path ABSENT while the pre-compaction
-    copy still exists — and a reader that treats "missing store" as
-    "empty store" would silently re-accept every previously-seen key.
-    This restores the ``.pre-compact`` dir back to the data path (the
-    compaction work is discarded, never the keys) and clears a stale
-    ``.compact-tmp``. Returns True when a recovery happened. Called by
-    the streaming store readers and by ``compact_flat_store`` itself,
-    so a crashed compaction heals on the next touch instead of
-    requiring a manual rename."""
-    from ..sources.fs import delete_path, hadoop_path_exists, join_uri, rename_path
+def _compact_flat(spark, store_dir: str, data_name: str, rewrite) -> bool:
+    """Publish ``rewrite(df)`` of a flat store's current data as its
+    next version. False when the store was never written."""
+    store = flat_store(store_dir, data_name)
+    meta, src = store.locate(spark)
+    if src is None:
+        return False
+    out = rewrite(spark.read.parquet(src))
 
-    data_path = join_uri(store_dir, data_name)
-    pre = data_path + ".pre-compact"
-    recovered = False
-    if not hadoop_path_exists(spark, data_path) and hadoop_path_exists(spark, pre):
-        rename_path(spark, pre, data_path)
-        recovered = True
-    # a stale tmp (crash mid-write or post-recovery) is always garbage
-    delete_path(spark, data_path + ".compact-tmp")
-    return recovered
+    def write(dst: str, mode: str) -> None:
+        out.write.mode(mode).parquet(dst)
+
+    store.publish(spark, meta or {}, write, meta or {})
+    return True
 
 
 def compact_flat_store(
@@ -1626,42 +1482,21 @@ def compact_flat_store(
     key_cols: list[str],
     num_files: int | None = None,
 ) -> None:
-    """Compaction for the FLAT replay-safe stores (the URL-dedup
-    ``urls.parquet`` and media-dedup ``hashes.parquet`` layouts): the
-    streaming appenders legitimately re-append a batch's keys when a
-    crash lands between the append and its ``.done`` marker
-    (documented harmless-but-wasteful), and every micro-batch adds
-    part files — this is where both accrue costs are reclaimed.
+    """Compact a flat presence store (``urls.parquet``,
+    ``hashes.parquet``): dedup by ``key_cols``, drop the stale
+    ``batch_id`` stamp, optionally coalesce to ``num_files`` files,
+    publish the result as the store's next version, then clear the
+    ``batches/`` replay markers. Run between committed batches. A
+    store never written is left alone."""
 
-    Dedups by ``key_cols`` (presence semantics — the screens only ask
-    whether a key exists), DROPS the ``batch_id`` stamp column (the
-    single-writer contract requires compaction to run between
-    committed batches, so every stamp is stale), optionally coalesces
-    to ``num_files`` part files, writes to a sibling tmp dir and swaps
-    via Hadoop-FS renames, then clears the stale ``batches/`` markers
-    (they only ever protect the last UNCOMMITTED batch).
-    """
-    from ..sources.fs import delete_path, hadoop_path_exists, join_uri, rename_path
+    def rewrite(df: DataFrame) -> DataFrame:
+        out = df.drop("batch_id").dropDuplicates(key_cols)
+        return out if num_files is None else out.repartition(int(num_files))
 
-    recover_flat_store(spark, store_dir, data_name)  # heal a prior crash first
-    data_path = join_uri(store_dir, data_name)
-    if not hadoop_path_exists(spark, data_path):
-        return
-    df = spark.read.parquet(data_path)
-    if "batch_id" in df.columns:
-        df = df.drop("batch_id")
-    out = df.dropDuplicates(key_cols)
-    if num_files is not None:
-        out = out.repartition(int(num_files))
-    tmp = data_path + ".compact-tmp"
-    pre = data_path + ".pre-compact"
-    delete_path(spark, tmp)
-    out.write.mode("overwrite").parquet(tmp)
-    delete_path(spark, pre)
-    rename_path(spark, data_path, pre)
-    rename_path(spark, tmp, data_path)
-    delete_path(spark, pre)
-    delete_path(spark, join_uri(store_dir, "batches"))
+    if _compact_flat(spark, store_dir, data_name, rewrite):
+        from ..sources.fs import delete_path, join_uri
+
+        delete_path(spark, join_uri(store_dir, "batches"))
 
 
 def compact_count_store(
@@ -1672,63 +1507,32 @@ def compact_count_store(
     count_col: str = "cnt",
     num_files: int | None = None,
 ) -> None:
-    """Compaction for ADDITIVE flat count stores (the streaming
-    domain-cap ``domains.parquet`` layout). Presence-semantics
-    compaction (``compact_flat_store``) would be WRONG here — counts
-    must SUM, and a crash-window duplicate append must be reclaimed by
-    the idempotence key, not dropped by value. The read/compact rule
-    both sides share: rows dedup by ``key_cols + [batch_id]`` (an
-    appender writes at most one row per key per batch, so a replayed
-    append is byte-identical and collapses), THEN sum. Compacted rows
-    carry ``batch_id`` NULL — one row per key, still unique under the
-    dedup key. Same tmp-write/rename swap as ``compact_flat_store``
-    (run between committed batches; ``recover_flat_store`` heals a
-    mid-swap crash) — but UNLIKE the presence stores, the ``batches/``
-    replay markers are KEPT: compaction folds a batch's counts into
-    ``batch_id``-NULL rows, which the read-side ``(key, batch_id)``
-    dedup can no longer exclude — so if that batch ever replays (a
-    checkpoint restored to before compaction), only its surviving
-    ``.done`` marker stops a re-append from double-counting. Markers
-    cost one tiny object per batch; for an ADDITIVE store that is the
-    cheap side of the trade."""
-    from ..sources.fs import delete_path, hadoop_path_exists, join_uri, rename_path
+    """Compact an additive flat count store (``domains.parquet``):
+    rows dedup by ``key_cols + [batch_id]`` (a replayed append is
+    byte-identical), then ``count_col`` sums to one row per key with
+    ``batch_id`` NULL, published as the store's next version. The
+    ``batches/`` markers are kept: folded counts can no longer be
+    excluded by stamp, so only a batch's marker stops a replay from
+    counting it twice."""
 
-    recover_flat_store(spark, store_dir, data_name)
-    data_path = join_uri(store_dir, data_name)
-    if not hadoop_path_exists(spark, data_path):
-        return
-    df = spark.read.parquet(data_path)
-    if "batch_id" in df.columns:
-        df = df.dropDuplicates(key_cols + ["batch_id"])
-    out = (
-        df.groupBy(*key_cols)
-        .agg(F.sum(count_col).alias(count_col))
-        .withColumn("batch_id", F.lit(None).cast("long"))
-    )
-    if num_files is not None:
-        out = out.repartition(int(num_files))
-    tmp = data_path + ".compact-tmp"
-    pre = data_path + ".pre-compact"
-    delete_path(spark, tmp)
-    out.write.mode("overwrite").parquet(tmp)
-    delete_path(spark, pre)
-    rename_path(spark, data_path, pre)
-    rename_path(spark, tmp, data_path)
-    delete_path(spark, pre)
+    def rewrite(df: DataFrame) -> DataFrame:
+        if "batch_id" in df.columns:
+            df = df.dropDuplicates(key_cols + ["batch_id"])
+        out = (
+            df.groupBy(*key_cols)
+            .agg(F.sum(count_col).alias(count_col))
+            .withColumn("batch_id", F.lit(None).cast("long"))
+        )
+        return out if num_files is None else out.repartition(int(num_files))
+
+    _compact_flat(spark, store_dir, data_name, rewrite)
 
 
 def compact_fingerprint_store(spark, path: str) -> None:
-    """Rewrite the bucketed FINGERPRINT store to one part file per
-    bucket — the exact-dedup half of the maintenance story
-    (``compact_signature_store``'s sibling). Besides collapsing the
-    per-append part files, full-row duplicates are dropped: a crash
-    between a streaming append and its marker write legitimately
-    re-appends the same (fp, batch_id) rows (documented
-    harmless-but-wasteful), and compaction is where that waste is
-    reclaimed. Presence-semantics make the drop safe — the anti-join
-    only asks whether a fingerprint exists.
-    """
-    _compact_store_data(spark, path, transform=lambda df: df.dropDuplicates())
+    """Rewrite the bucketed fingerprint store as one part file per
+    bucket with full-row duplicates (a crash-window double append)
+    dropped, and publish it as a new version."""
+    compact_partitioned(spark, _banded_store(path), "bucket")
 
 
 def dedup_minhash_incremental_bucketed(
@@ -1757,13 +1561,11 @@ def dedup_minhash_incremental_bucketed(
     and the matching store partitions, never the full store.
 
     Banding parameters come from the store's frozen meta; ``num_hashes``
-    /``shingle_n``/``seed`` — and the ``cjk``/``cjk_shingle_n`` routing
-    (round 14) — must match what produced the stored signatures (they
-    parameterize the batch side; routed and unrouted signatures are
-    incomparable). Round 15: the batch's full signing recipe is
-    ASSERTED against the store's frozen ``signing`` meta before any
-    work — a mismatch raises (``_check_signing``; legacy metas without
-    the record are treated as unrouted). With
+    /``shingle_n``/``seed`` and the ``cjk``/``cjk_shingle_n`` routing
+    must match what produced the stored signatures: the batch's full
+    signing recipe is asserted against the store's frozen ``signing``
+    meta before any work, and a mismatch raises (``_check_signing``;
+    legacy metas without the record are treated as unrouted). With
     ``append_survivors=True`` the accepted signatures are appended to
     the store before returning (survivors are localCheckpoint-pinned
     first so the already-computed result can't observe the append).
@@ -1782,7 +1584,6 @@ def dedup_minhash_incremental_bucketed(
     from ..sources.fs import join_uri
 
     spark = new_df.sparkSession
-    recover_store_data(spark, store_path)  # heal a crashed compaction
     meta = read_signature_store_meta(spark, store_path)
     nb = meta["num_bands"]
     num_buckets = meta["num_buckets"]
@@ -1847,7 +1648,7 @@ def dedup_minhash_incremental_bucketed(
     store_schema = StructType.fromJson(meta["schema"])
     store = (
         spark.read.schema(store_schema)
-        .parquet(join_uri(store_path, _STORE_DATA_DIR))
+        .parquet(_banded_store(store_path).data_path(meta))
         .where(F.col("bucket").isin(batch_buckets))
     )
     store = _exclude_batch_filter(store, store_schema, exclude_batch_id)

@@ -824,25 +824,18 @@ def check_media_signing(frozen: dict | None, declared: dict, caller: str) -> Non
 
 
 def stamp_media_signing(spark, store_dir: str, signing: dict) -> None:
-    """Migration helper for LEGACY media-hash stores (seeded before
-    round 16 froze recipes): write the attested signing recipe into
-    the store's ``media_signing.json`` sidecar WITHOUT re-hashing —
-    the codes in a legacy store are fine; only the attestation is
-    missing. Refuses to overwrite a differing frozen recipe (that
-    would launder a real mismatch into an attested one)."""
-    import json
-
-    from ..sources.fs import (
-        hadoop_path_exists,
-        join_uri,
-        read_text_file,
-        write_text_file,
-    )
+    """Attest the signing recipe of a legacy media-hash store (one
+    seeded before recipes were frozen) in its ``media_signing.json``
+    sidecar without re-hashing. Refuses to overwrite a differing frozen
+    recipe (that would launder a real mismatch into an attested one)."""
+    from ..sources.fs import join_uri
+    from ..sources.store import commit_meta, read_meta
 
     signing = media_signing(**signing)
     sidecar = join_uri(store_dir, MEDIA_SIGNING_SIDECAR)
-    if hadoop_path_exists(spark, sidecar):
-        frozen = json.loads(read_text_file(spark, sidecar)).get("signing")
+    meta = read_meta(spark, sidecar)
+    if meta is not None:
+        frozen = meta.get("signing")
         if frozen != signing:
             raise ValueError(
                 f"stamp_media_signing: store already carries a frozen "
@@ -850,4 +843,4 @@ def stamp_media_signing(spark, store_dir: str, signing: dict) -> None:
                 "over it would attest incomparable codes as comparable."
             )
         return
-    write_text_file(spark, sidecar, json.dumps({"signing": signing}))
+    commit_meta(spark, sidecar, {"signing": signing})

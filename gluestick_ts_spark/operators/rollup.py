@@ -176,15 +176,9 @@ def read_rollup(
     other store is the plain date-partitioned parquet layout the batch
     ``write_rollup``/``refresh_rollup`` maintain.
     """
-    from ..sources.fs import hadoop_path_exists, join_uri
-
-    meta_path = join_uri(path, _DELTA_META)
-    # a pointer mid-commit (crash between tmp write and rename) still
-    # marks the delta layout — _read_rollup_meta self-heals the rename
-    if hadoop_path_exists(spark, meta_path) or hadoop_path_exists(
-        spark, meta_path + ".tmp"
-    ):
-        df = _read_delta_layout(spark, path)
+    meta = _rollup_store(path).read_meta(spark)
+    if meta is not None:
+        df = _read_delta_layout(spark, path, meta)
     else:
         df = spark.read.parquet(path).drop(_DATE)
     return _derive_means(df) if derive_means else df
@@ -357,78 +351,25 @@ def refresh_rollup(
 # ---------------------------------------------------------------------------
 # Delta-snapshot layout: EXACTLY-ONCE continuous aggregation.
 #
-# The additive refresh above is idempotent only per offset range WITH a
-# committed checkpoint; a replayed micro-batch would re-add its counts.
-# The delta layout closes that window structurally:
-#
-#   <path>/rollup_meta.json          -- the POINTER (single commit point):
+#   <path>/rollup_meta.json          -- the store meta (commit point):
 #                                       {version, base, folded:{scope: W},
 #                                        keys, sum_cols}
 #   <path>/base_v<k>/...             -- immutable merged snapshots
 #   <path>/deltas/<scope>/<batch>/   -- one partial aggregate per
 #                                       micro-batch, date-partitioned
 #
-# Every micro-batch OVERWRITES its own (scope, batch) delta dir — a
-# crash-replayed batch rewrites the same bytes instead of double-adding
-# (per-batch writes are idempotent by PATH, no marker protocol needed).
-# Readers see meta.base plus every delta with batch > folded[scope] and
-# re-aggregate; compaction folds deltas into a NEW base_v<k+1> dir and
-# then atomically advances the pointer, so a crash anywhere before the
-# pointer write leaves the previous consistent view (orphan dirs are
-# garbage, removed best-effort after the next successful commit).
-# Single-writer contract like every other store; reads during an
-# in-flight batch see the previous batch's view.
+# Every micro-batch OVERWRITES its own (scope, batch) delta dir, so a
+# crash-replayed batch rewrites the same bytes instead of double-adding.
+# Readers see meta.base plus every delta with batch > folded[scope];
+# compaction publishes the fold as base_v<k+1> (``sources/store.py``).
+# Single-writer; reads during an in-flight batch see the previous view.
 # ---------------------------------------------------------------------------
 
 
-def _read_rollup_meta(spark: SparkSession, path: str) -> dict:
-    """Read the pointer; self-heal the tmp-rename crash window. The
-    writer's sequence is write-tmp → delete-old → rename-tmp: a crash
-    between the last two leaves no meta but a COMPLETE tmp holding the
-    newest consistent pointer, so finishing the rename here recovers
-    the store instead of failing every read."""
-    import json
+def _rollup_store(path: str):
+    from ..sources.store import Store
 
-    from ..sources.fs import (
-        hadoop_path_exists,
-        join_uri,
-        read_text_file,
-        rename_path,
-    )
-
-    meta_path = join_uri(path, _DELTA_META)
-    tmp_path = meta_path + ".tmp"
-    if not hadoop_path_exists(spark, meta_path) and hadoop_path_exists(
-        spark, tmp_path
-    ):
-        rename_path(spark, tmp_path, meta_path)
-    return json.loads(read_text_file(spark, meta_path))
-
-
-def _write_rollup_meta(spark: SparkSession, path: str, meta: dict) -> None:
-    """Pointer write via tmp + rename — never truncate-in-place: the
-    pointer is the store's single commit point, and an in-place
-    ``create(overwrite)`` would destroy the previous consistent view
-    if the driver died mid-write. Every crash window leaves either
-    the old meta, or a complete tmp that ``_read_rollup_meta``
-    self-heals into place."""
-    import json
-
-    from ..sources.fs import (
-        delete_path,
-        hadoop_path_exists,
-        join_uri,
-        rename_path,
-        write_text_file,
-    )
-
-    meta_path = join_uri(path, _DELTA_META)
-    tmp_path = meta_path + ".tmp"
-    write_text_file(spark, tmp_path, json.dumps(meta))
-    if hadoop_path_exists(spark, meta_path):
-        delete_path(spark, meta_path, recursive=False)
-    if not rename_path(spark, tmp_path, meta_path):
-        raise IOError(f"rollup meta commit failed: {tmp_path} -> {meta_path}")
+    return Store(path, "base", _DELTA_META)
 
 
 def _unfolded_delta_dirs(
@@ -456,10 +397,9 @@ def _merge_parts(parts: list[DataFrame], keys: list[str]) -> DataFrame:
     return _remerge(df, keys)
 
 
-def _read_delta_layout(spark: SparkSession, path: str) -> DataFrame:
+def _read_delta_layout(spark: SparkSession, path: str, meta: dict) -> DataFrame:
     from ..sources.fs import join_uri
 
-    meta = _read_rollup_meta(spark, path)
     keys = meta["keys"]
     parts: list[DataFrame] = []
     if meta.get("base"):
@@ -488,14 +428,14 @@ def write_rollup_delta(
     its partial aggregate to the batch's OWN directory (overwrite) —
     cost ∝ batch, and a replay of the same (scope, batch_no) rewrites
     the identical delta instead of double-adding. Seeds the pointer
-    file on first use."""
-    from ..sources.fs import hadoop_path_exists, join_uri
+    meta on first use."""
+    from ..sources.fs import join_uri
 
     spark = batch_df.sparkSession
-    if not hadoop_path_exists(spark, join_uri(path, _DELTA_META)):
-        _write_rollup_meta(
+    store = _rollup_store(path)
+    if store.read_meta(spark) is None:
+        store.commit(
             spark,
-            path,
             {
                 "version": 0,
                 "base": None,
@@ -514,19 +454,10 @@ def write_rollup_delta(
     )
 
 
-def _sweep_rollup_garbage(spark: SparkSession, path: str, meta: dict) -> None:
-    """Delete everything the current pointer can no longer reach:
-    base_v* dirs other than ``meta['base']`` and delta dirs at or
-    below their scope's folded watermark. Crash-orphaned dirs (a
-    previous compaction died after its pointer commit, before its
-    delete loop) are exactly this set, so every later compaction
-    reclaims them — reads never consult them either way."""
+def _sweep_folded_deltas(spark: SparkSession, path: str, meta: dict) -> None:
+    """Delete delta dirs at or below their scope's folded watermark."""
     from ..sources.fs import delete_path, join_uri, list_dir_names
 
-    current = meta.get("base")
-    for name in list_dir_names(spark, path):
-        if name.startswith("base_v") and name != current:
-            delete_path(spark, join_uri(path, name))
     droot = join_uri(path, _DELTAS_DIR)
     folded = meta.get("folded", {})
     for scope in list_dir_names(spark, droot):
@@ -538,40 +469,32 @@ def _sweep_rollup_garbage(spark: SparkSession, path: str, meta: dict) -> None:
 
 def compact_rollup(spark: SparkSession, path: str) -> None:
     """Fold every unfolded delta into a new immutable base snapshot and
-    advance the pointer. The pointer write is the single commit point:
-    a crash before it leaves the previous (consistent) view plus
-    orphan dirs; after it, a garbage sweep removes every dir the new
-    pointer can no longer reach — INCLUDING orphans a previous
-    compaction's crash left behind, since the sweep works from the
-    pointer's watermarks, not from this run's delta list. With nothing
-    unfolded the call is sweep-only. Run between batches
-    (single-writer contract)."""
+    publish it (``sources/store.py``); then delete every base and delta
+    dir the meta can no longer reach, including orphans an earlier
+    crashed compaction left. With nothing unfolded the call only
+    sweeps. Run between batches (single-writer)."""
     from ..sources.fs import join_uri
 
-    meta = _read_rollup_meta(spark, path)
+    store = _rollup_store(path)
+    meta = store.require_meta(spark)
     deltas = _unfolded_delta_dirs(spark, path, meta)
-    if not deltas:
-        _sweep_rollup_garbage(spark, path, meta)
-        return
-    parts: list[DataFrame] = []
-    old_base = meta.get("base")
-    if old_base:
-        parts.append(spark.read.parquet(join_uri(path, old_base)))
-    parts.extend(spark.read.parquet(d) for _, _, d in deltas)
-    merged = _merge_parts(parts, meta["keys"])
-    new_base = f"base_v{int(meta['version']) + 1}"
-    merged.write.partitionBy(_DATE).mode("overwrite").parquet(
-        join_uri(path, new_base)
-    )
-    folded = dict(meta.get("folded", {}))
-    for scope, b, _ in deltas:
-        folded[scope] = max(int(folded.get(scope, -1)), b)
-    new_meta = {
-        **meta,
-        "version": int(meta["version"]) + 1,
-        "base": new_base,
-        "folded": folded,
-    }
-    _write_rollup_meta(spark, path, new_meta)
-    # past the commit point: everything unreachable is garbage
-    _sweep_rollup_garbage(spark, path, new_meta)
+    if deltas:
+        parts: list[DataFrame] = []
+        if meta.get("base"):
+            parts.append(spark.read.parquet(join_uri(path, meta["base"])))
+        parts.extend(spark.read.parquet(d) for _, _, d in deltas)
+        merged = _merge_parts(parts, meta["keys"])
+        folded = dict(meta.get("folded", {}))
+        for scope, b, _ in deltas:
+            folded[scope] = max(int(folded.get(scope, -1)), b)
+        version = int(meta["version"]) + 1
+        new_meta = {**meta, "base": store.dir_name(version), "folded": folded}
+
+        def write(dst: str, mode: str) -> None:
+            merged.write.partitionBy(_DATE).mode(mode).parquet(dst)
+
+        store.publish(spark, new_meta, write, meta)
+        meta = {**new_meta, "version": version}
+    else:
+        store.sweep(spark, meta)
+    _sweep_folded_deltas(spark, path, meta)

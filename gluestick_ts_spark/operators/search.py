@@ -46,6 +46,7 @@ from ..functions.text import (
     is_cjk_doc_expr,
     tokens_expr,
 )
+from ..sources.store import Store
 from .dedup import _spread
 
 
@@ -319,7 +320,10 @@ def rrf_fuse(
 # ---------------------------------------------------------------------------
 
 _BM25_POSTINGS_DIR = "postings"
-_BM25_META_FILE = "store_meta.json"
+
+
+def _bm25_store(path: str) -> Store:
+    return Store(path, _BM25_POSTINGS_DIR)
 
 
 def _term_bucket(num_buckets: int) -> Column:
@@ -343,10 +347,8 @@ def write_bm25_index(
     ``<path>/store_meta.json`` (``n_docs`` + ``sum_dl``, so appends can
     update them exactly; ``avgdl`` derives at read). Layout:
     ``postings/bucket=<k>/`` plus the meta — document frequencies are
-    not stored; the probe derives them. Single-writer; Hadoop-FS-safe
-    paths."""
-    from ..sources.fs import join_uri, write_text_file
-
+    not stored; the probe derives them. Rewriting an existing index
+    publishes a new version (``sources/store.py``). Single-writer."""
     if mode != "overwrite":
         # any other mode corrupts the index: the meta's n_docs/sum_dl
         # would describe this batch only while the postings hold more
@@ -359,13 +361,6 @@ def write_bm25_index(
     post = term_postings(docs, id_col, text_col, cjk_route, cjk_n).withColumn(
         "bucket", _term_bucket(num_buckets)
     )
-    # repartition ON the bucket key before the partitioned write: each
-    # bucket lands wholly in one task, so the layout is ~1 file/bucket
-    # instead of tasks x buckets tiny files — the probe's pruned scan
-    # opens one file per probed bucket
-    post.repartition(num_buckets, "bucket").write.mode(mode).partitionBy(
-        "bucket"
-    ).parquet(join_uri(path, _BM25_POSTINGS_DIR))
     n_docs, sum_dl = _corpus_stats(docs, id_col, text_col, cjk_route, cjk_n)
     meta = {
         "num_buckets": num_buckets,
@@ -378,7 +373,18 @@ def write_bm25_index(
         "sum_dl": sum_dl,
         "postings_schema": json.loads(post.schema.json()),
     }
-    write_text_file(docs.sparkSession, join_uri(path, _BM25_META_FILE), json.dumps(meta))
+
+    def write(dst: str, mode: str) -> None:
+        # repartition ON the bucket key before the partitioned write:
+        # each bucket lands wholly in one task, so the layout is ~1
+        # file/bucket instead of tasks x buckets tiny files — the
+        # probe's pruned scan opens one file per probed bucket
+        post.repartition(num_buckets, "bucket").write.mode(mode).partitionBy(
+            "bucket"
+        ).parquet(dst)
+
+    store = _bm25_store(path)
+    store.publish(docs.sparkSession, meta, write, store.read_meta(docs.sparkSession))
 
 
 def _corpus_stats(
@@ -402,9 +408,7 @@ def _corpus_stats(
 
 
 def read_bm25_index_meta(spark, path: str) -> dict:
-    from ..sources.fs import join_uri, read_text_file
-
-    return json.loads(read_text_file(spark, join_uri(path, _BM25_META_FILE)))
+    return _bm25_store(path).require_meta(spark)
 
 
 def _check_frozen_grain(
@@ -454,8 +458,6 @@ def append_bm25_index(
     what the caller expects (the ``append_signature_store(signing=…)``
     pattern): pass them to make a grain drift raise instead of being
     silently overridden by the meta; None skips the check."""
-    from ..sources.fs import join_uri, write_text_file
-
     spark = docs.sparkSession
     meta = read_bm25_index_meta(spark, path)
     _check_frozen_grain(meta, cjk_route, cjk_n, "append_bm25_index")
@@ -464,12 +466,12 @@ def append_bm25_index(
     term_postings(docs, id_col, text_col, cjk_route, cjk_n).withColumn(
         "bucket", _term_bucket(meta["num_buckets"])
     ).write.mode("append").partitionBy("bucket").parquet(
-        join_uri(path, _BM25_POSTINGS_DIR)
+        _bm25_store(path).data_path(meta)
     )
     n_docs, sum_dl = _corpus_stats(docs, id_col, text_col, cjk_route, cjk_n)
     meta["n_docs"] += n_docs
     meta["sum_dl"] += sum_dl
-    write_text_file(spark, join_uri(path, _BM25_META_FILE), json.dumps(meta))
+    _bm25_store(path).commit(spark, meta)
 
 
 def bm25_index_topk(
@@ -505,8 +507,6 @@ def bm25_index_topk(
     frozen grain always governs query tokenization."""
     from pyspark.sql.types import StructType
 
-    from ..sources.fs import join_uri
-
     spark = queries.sparkSession
     meta = read_bm25_index_meta(spark, path)
     _check_frozen_grain(meta, cjk_route, cjk_n, "bm25_index_topk")
@@ -524,7 +524,7 @@ def bm25_index_topk(
     ).withColumn("bucket", _term_bucket(meta["num_buckets"]))
     post = spark.read.schema(
         StructType.fromJson(meta["postings_schema"])
-    ).parquet(join_uri(path, _BM25_POSTINGS_DIR))
+    ).parquet(_bm25_store(path).data_path(meta))
     by_term = Window.partitionBy("query_id", "term")
     matched = (
         post.join(F.broadcast(qterms), on=["term", "bucket"])

@@ -28,6 +28,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.vectors import cosine_similarity_expr, dot_expr
+from ..sources.store import Store, _exclude_batch_filter, compact_partitioned
 from .dedup import _spread
 
 __all__ = [
@@ -1496,7 +1497,6 @@ def semantic_dedup(
 
 
 _SEM_DATA_DIR = "clusters"
-_SEM_META_FILE = "store_meta.json"
 
 
 def write_semantic_store(
@@ -1519,15 +1519,14 @@ def write_semantic_store(
     for the same reason).
 
     Store layout: ``<path>/clusters/cid=<k>/*.parquet`` (id, v) +
-    ``<path>/store_meta.json`` {centroids, schema}. Paths resolve
-    through the Hadoop FS API; single-writer contract like the other
-    incremental stores. ``with_batch_col=True`` freezes a ``batch_id``
-    provenance column into the schema (seed rows get -1): the
+    ``<path>/store_meta.json`` {centroids, schema}, on the
+    ``sources/store.py`` protocol (an overwrite of an existing store
+    publishes a new version). Single-writer. ``with_batch_col=True``
+    freezes a ``batch_id`` provenance column into the schema (seed
+    rows get -1): the
     streaming wrapper stamps every append with its micro-batch id so
     crash-replays can exclude their own earlier append.
     """
-    from ..sources.fs import join_uri, write_text_file
-
     spark = corpus.sparkSession
     if centroids is None:
         rows = (
@@ -1548,23 +1547,23 @@ def write_semantic_store(
     assigned = _semantic_assign(corpus, centroids, id_col, vec_col)
     if with_batch_col:
         assigned = assigned.withColumn("batch_id", F.lit(-1).cast("long"))
-    assigned.write.mode(mode).partitionBy("cid").parquet(
-        join_uri(path, _SEM_DATA_DIR)
-    )
     meta = {
         "centroids": centroids,
         # frozen read schema: empty/partial stores must open without
         # footer inference
         "schema": json.loads(assigned.schema.json()),
     }
-    write_text_file(spark, join_uri(path, _SEM_META_FILE), json.dumps(meta))
+
+    def write(dst: str, mode: str) -> None:
+        assigned.write.mode(mode).partitionBy("cid").parquet(dst)
+
+    store = Store(path, _SEM_DATA_DIR)
+    store.publish(spark, meta, write, store.read_meta(spark), mode)
 
 
 def read_semantic_store_meta(spark, path: str) -> dict:
-    """Centroids (and frozen schema) from store-creation time."""
-    from ..sources.fs import join_uri, read_text_file
-
-    return json.loads(read_text_file(spark, join_uri(path, _SEM_META_FILE)))
+    """Centroids, frozen schema and data version of the cluster store."""
+    return Store(path, _SEM_DATA_DIR).require_meta(spark)
 
 
 def append_semantic_store(assigned: DataFrame, path: str) -> None:
@@ -1574,8 +1573,6 @@ def append_semantic_store(assigned: DataFrame, path: str) -> None:
     belong to. ``assigned`` must carry every frozen store column
     (appending a narrower relation would silently null provenance
     columns later replay-exclusion reads depend on)."""
-    from ..sources.fs import join_uri
-
     meta = read_semantic_store_meta(assigned.sparkSession, path)
     cols = [f["name"] for f in meta["schema"]["fields"]]
     missing = [c for c in cols if c not in assigned.columns]
@@ -1584,31 +1581,16 @@ def append_semantic_store(assigned: DataFrame, path: str) -> None:
             f"append_semantic_store: assigned lacks frozen store columns {missing}"
         )
     assigned.write.mode("append").partitionBy("cid").parquet(
-        join_uri(path, _SEM_DATA_DIR)
+        Store(path, _SEM_DATA_DIR).data_path(meta)
     )
 
 
 def compact_semantic_store(spark, path: str) -> None:
-    """Rewrite the cluster store to one part file per cid dir — the
-    semantic sibling of ``compact_signature_store``: every streaming
-    append adds part files to the cluster dirs it touches, and after
-    many batches file-open count dominates the pruned candidate scan.
-    Full-row duplicates (a crash-window double append) and stale
-    replay markers are reclaimed. Shares ``_compact_store_data``'s
-    swap/durability contract; single-writer — run between batches."""
-    from pyspark.sql.types import StructType
-
-    from .dedup import _compact_store_data
-
-    meta = read_semantic_store_meta(spark, path)
-    _compact_store_data(
-        spark,
-        path,
-        transform=lambda df: df.dropDuplicates(),
-        data_dir=_SEM_DATA_DIR,
-        part_col="cid",
-        schema=StructType.fromJson(meta["schema"]),
-    )
+    """Rewrite the cluster store as one part file per cid dir with
+    full-row duplicates (a crash-window double append) and stale
+    replay markers dropped, published as a new version. Run between
+    batches."""
+    compact_partitioned(spark, Store(path, _SEM_DATA_DIR), "cid")
 
 
 def semantic_dedup_incremental(
@@ -1641,11 +1623,7 @@ def semantic_dedup_incremental(
     """
     from pyspark.sql.types import StructType
 
-    from ..sources.fs import join_uri
-    from .dedup import _exclude_batch_filter, recover_store_data
-
     spark = batch.sparkSession
-    recover_store_data(spark, path, _SEM_DATA_DIR)  # heal a crashed compaction
     meta = read_semantic_store_meta(spark, path)
     cents = meta["centroids"]
     assigned = _semantic_assign(batch, cents, id_col, vec_col).localCheckpoint(
@@ -1655,7 +1633,7 @@ def semantic_dedup_incremental(
     schema = StructType.fromJson(meta["schema"])
     store = (
         spark.read.schema(schema)
-        .parquet(join_uri(path, _SEM_DATA_DIR))
+        .parquet(Store(path, _SEM_DATA_DIR).data_path(meta))
         .where(F.col("cid").isin(batch_cids))
     )
     store = _exclude_batch_filter(store, schema, exclude_batch_id)
@@ -1708,7 +1686,6 @@ def semantic_dedup_incremental(
 # ---------------------------------------------------------------------------
 
 _IVF_DATA_DIR = "lists"
-_IVF_META_FILE = "store_meta.json"
 
 
 def write_ivf_store(
@@ -1727,10 +1704,9 @@ def write_ivf_store(
     assigns identically (the signature/semantic-store freezing rule).
     Centroid precedence: explicit ``centroids`` > ``train_iters``
     Lloyd's rounds > deterministic first-``n_centroids``-rows seed.
-    Layout: ``<path>/lists/cid=<k>/*.parquet`` + meta. Single-writer;
-    paths resolve through the Hadoop FS API."""
-    from ..sources.fs import join_uri, write_text_file
-
+    Layout: ``<path>/lists/cid=<k>/*.parquet`` + meta, on the
+    ``sources/store.py`` protocol (an overwrite of an existing index
+    publishes a new version). Single-writer."""
     spark = corpus.sparkSession
     if centroids is None:
         if train_iters > 0:
@@ -1745,18 +1721,22 @@ def write_ivf_store(
             "index must still freeze its quantizer"
         )
     assigned = _ivf_store_rows(corpus, centroids, id_col, vec_col)
-    # repartition ON cid: ~1 file/list instead of tasks x lists tiny
-    # files — a probe's pruned scan opens nprobe files, not thousands
-    assigned.repartition(len(centroids), "cid").write.mode(mode).partitionBy(
-        "cid"
-    ).parquet(join_uri(path, _IVF_DATA_DIR))
     meta = {
         "centroids": centroids,
         # frozen read schema: empty/partial stores open without footer
         # inference
         "schema": json.loads(assigned.schema.json()),
     }
-    write_text_file(spark, join_uri(path, _IVF_META_FILE), json.dumps(meta))
+
+    def write(dst: str, mode: str) -> None:
+        # repartition ON cid: ~1 file/list instead of tasks x lists tiny
+        # files — a probe's pruned scan opens nprobe files, not thousands
+        assigned.repartition(len(centroids), "cid").write.mode(
+            mode
+        ).partitionBy("cid").parquet(dst)
+
+    store = Store(path, _IVF_DATA_DIR)
+    store.publish(spark, meta, write, store.read_meta(spark), mode)
 
 
 def _ivf_store_rows(
@@ -1770,10 +1750,8 @@ def _ivf_store_rows(
 
 
 def read_ivf_store_meta(spark, path: str) -> dict:
-    """Centroids (and frozen schema) from index-creation time."""
-    from ..sources.fs import join_uri, read_text_file
-
-    return json.loads(read_text_file(spark, join_uri(path, _IVF_META_FILE)))
+    """Centroids, frozen schema and data version of the IVF index."""
+    return Store(path, _IVF_DATA_DIR).require_meta(spark)
 
 
 def append_ivf_store(
@@ -1788,11 +1766,9 @@ def append_ivf_store(
     here — recall drifts as the corpus distribution moves, so rebuild
     (``write_ivf_store``) when list balance degrades."""
     meta = read_ivf_store_meta(batch.sparkSession, path)
-    from ..sources.fs import join_uri
-
     rows = _ivf_store_rows(batch, meta["centroids"], id_col, vec_col)
     rows.write.mode("append").partitionBy("cid").parquet(
-        join_uri(path, _IVF_DATA_DIR)
+        Store(path, _IVF_DATA_DIR).data_path(meta)
     )
 
 
@@ -1814,11 +1790,7 @@ def ann_ivf_store_topk(
     ``ann_ivf_topk`` with the same centroids)."""
     from pyspark.sql.types import StructType
 
-    from ..sources.fs import join_uri
-    from .dedup import recover_store_data
-
     spark = queries.sparkSession
-    recover_store_data(spark, path, _IVF_DATA_DIR)  # heal a crashed compaction
     meta = read_ivf_store_meta(spark, path)
     cents_lit = _centroid_exprs(meta["centroids"])
     q = queries.select(
@@ -1833,7 +1805,7 @@ def ann_ivf_store_topk(
     probes = [r[0] for r in q_probes.select("cid").distinct().collect()]
     store = (
         spark.read.schema(StructType.fromJson(meta["schema"]))
-        .parquet(join_uri(path, _IVF_DATA_DIR))
+        .parquet(Store(path, _IVF_DATA_DIR).data_path(meta))
         # partition-pruned scan: only the probed list dirs are read
         .where(F.col("cid").isin(probes))
     )
@@ -1854,19 +1826,7 @@ def ann_ivf_store_topk(
 
 
 def compact_ivf_store(spark, path: str) -> None:
-    """One part file per list dir; full-row duplicates from a
-    crash-window double append reclaimed. Shares
-    ``_compact_store_data``'s swap/durability contract."""
-    from pyspark.sql.types import StructType
-
-    from .dedup import _compact_store_data
-
-    meta = read_ivf_store_meta(spark, path)
-    _compact_store_data(
-        spark,
-        path,
-        transform=lambda df: df.dropDuplicates(),
-        data_dir=_IVF_DATA_DIR,
-        part_col="cid",
-        schema=StructType.fromJson(meta["schema"]),
-    )
+    """Rewrite the index as one part file per list dir with full-row
+    duplicates (a crash-window double append) dropped, published as a
+    new version."""
+    compact_partitioned(spark, Store(path, _IVF_DATA_DIR), "cid")

@@ -146,7 +146,9 @@ def _atomic_write(
     may live on any Spark-writable scheme. The swap is two renames —
     atomic on HDFS/local; on object stores the connector emulates
     rename with copy+delete, so a concurrent reader there needs the
-    usual object-store caveats (or a table format with a log).
+    usual object-store caveats (or a table format with a log). A
+    rename that reports failure raises, with the old snapshot left
+    readable at ``final_path``.
     """
     spark = df.sparkSession
     token = uuid.uuid4().hex[:8]
@@ -162,11 +164,14 @@ def _atomic_write(
             make_dirs(spark, head)
         if hadoop_path_exists(spark, final_path):
             old = _hidden_sibling(final_path, f".old-{token}")
-            rename_path(spark, final_path, old)
-            rename_path(spark, tmp, final_path)
+            if not rename_path(spark, final_path, old):
+                raise IOError(f"snapshot: could not move {final_path} aside")
+            if not rename_path(spark, tmp, final_path):
+                rename_path(spark, old, final_path)
+                raise IOError(f"snapshot: could not move {tmp} into place")
             delete_path(spark, old)
-        else:
-            rename_path(spark, tmp, final_path)
+        elif not rename_path(spark, tmp, final_path):
+            raise IOError(f"snapshot: could not move {tmp} into place")
     except Exception:
         delete_path(spark, tmp)
         raise

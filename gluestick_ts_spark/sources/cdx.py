@@ -512,7 +512,10 @@ def write_cdx_parquet(index: DataFrame, path: str, mode: str = "error") -> None:
     groups instead of scanning GBs of text lines. ``_error`` rows
     (null urlkey) are excluded, like ``write_cdxj`` — an index row
     without a key is unprobeable. Use :func:`probe_cdx_parquet` to
-    apply both pruning filters from one prefix."""
+    apply both pruning filters from one prefix. ``mode="append"``
+    appends to the index's current version."""
+    if mode == "append":
+        path = _cdx_data_path(index.sparkSession, path)
     out = index.where(F.col("urlkey").isNotNull()).withColumn(
         "tld", F.regexp_extract("urlkey", r"^([^,)]+)", 1)
     )
@@ -531,7 +534,7 @@ def read_cdx_parquet(spark: SparkSession, path: str) -> DataFrame:
     partition-prune; drop it for a pure CDX frame). Plain parquet scan
     — splittable, column-pruned, filter-pushed by Catalyst."""
     cols = [c.split()[0] for c in CDX_SCHEMA.split(", ")]
-    return spark.read.parquet(path).select(*cols, "tld")
+    return spark.read.parquet(_cdx_data_path(spark, path)).select(*cols, "tld")
 
 
 def append_cdx_parquet(index: DataFrame, path: str) -> None:
@@ -546,176 +549,44 @@ def append_cdx_parquet(index: DataFrame, path: str) -> None:
     write_cdx_parquet(index, path, mode="append")
 
 
-#: Copy-complete marker the non-atomic ``_fs_move_dir`` fallback
-#: writes into ``dst`` AFTER every data byte has landed and BEFORE
-#: ``src`` is deleted. ``_``-prefixed so Spark/parquet dataset
-#: discovery ignores it (the ``_SUCCESS`` convention). Crash
-#: protocols (``compact_cdx_parquet``) key on it: a directory that
-#: lacks the sentinel while its sibling backup carries one is a
-#: PARTIAL copy, never the authoritative side.
-_MOVE_SENTINEL = "_GS_MOVE_COMPLETE"
+def _cdx_store(path: str):
+    """The columnar index as a store: legacy data is ``path`` itself,
+    compacted versions are the hidden ``path/_v<k>`` dirs named by
+    ``path/_store_meta.json`` (hidden, so a legacy scan of ``path``
+    never sees them)."""
+    from .store import Store
+
+    return Store(path, "", "_store_meta.json")
 
 
-def _has_move_sentinel(filesystem, path: str) -> bool:
-    from pyarrow import fs as pafs
-
-    info = filesystem.get_file_info(path.rstrip("/") + "/" + _MOVE_SENTINEL)
-    return info.type == pafs.FileType.File
-
-
-def _delete_move_sentinel(filesystem, path: str) -> None:
-    if _has_move_sentinel(filesystem, path):
-        filesystem.delete_file(path.rstrip("/") + "/" + _MOVE_SENTINEL)
-
-
-def _fs_move_dir(filesystem, src: str, dst: str) -> None:
-    """Directory move through ``pyarrow.fs`` with an object-store
-    fallback: POSIX/HDFS filesystems get the native (atomic) rename;
-    filesystems whose ``move`` rejects directories — pyarrow's
-    S3FileSystem refuses prefix moves — fall back to a recursive
-    per-file COPY to the destination followed by a source delete.
-    The fallback is never destructive (every byte is copied before
-    anything is deleted) but it is NOT atomic: a crash mid-copy
-    leaves a partial ``dst`` beside an intact ``src``, and a crash
-    mid-delete leaves a partial ``src`` beside a complete ``dst``.
-    So that callers can TELL the two apart, the fallback writes a
-    ``_GS_MOVE_COMPLETE`` sentinel file into ``dst`` after the last
-    data byte and before the first delete: a ``dst`` without the
-    sentinel is a partial copy; a surviving ``src`` beside a
-    sentinel-bearing ``dst`` is the stale side. Any sentinel already
-    present in ``src`` (from an earlier fallback move) is skipped on
-    copy — only a freshly-written sentinel attests THIS move.
-
-    Only the directory-move refusal (``NotImplementedError`` —
-    pyarrow's ``ArrowNotImplementedError`` subclasses it — or an
-    ``OSError`` whose message names the refusal) triggers the
-    fallback; transient I/O/auth failures of a native rename
-    re-raise so a rename-capable filesystem never silently degrades
-    to the non-atomic path."""
-    from pyarrow import fs as pafs
-
-    try:
-        filesystem.move(src, dst)
-        return
-    except NotImplementedError:
-        # ArrowNotImplementedError (S3's directory-move refusal)
-        # subclasses NotImplementedError
-        pass
-    except OSError as exc:
-        msg = str(exc).lower()
-        if not ("not implement" in msg or "director" in msg):
-            raise
-    src = src.rstrip("/")
-    dst = dst.rstrip("/")
-    infos = filesystem.get_file_info(
-        pafs.FileSelector(src, recursive=True, allow_not_found=False)
-    )
-    filesystem.create_dir(dst, recursive=True)
-    for info in sorted(infos, key=lambda i: i.path):
-        rel = info.path[len(src):].lstrip("/")
-        target = f"{dst}/{rel}"
-        if info.type == pafs.FileType.Directory:
-            filesystem.create_dir(target, recursive=True)
-        elif info.type == pafs.FileType.File:
-            if rel == _MOVE_SENTINEL:
-                continue
-            parent = target.rsplit("/", 1)[0]
-            if parent != dst:
-                filesystem.create_dir(parent, recursive=True)
-            filesystem.copy_file(info.path, target)
-    with filesystem.open_output_stream(f"{dst}/{_MOVE_SENTINEL}") as out:
-        out.write(b"")
-    filesystem.delete_dir(src)
+def _cdx_data_path(spark: SparkSession, path: str) -> str:
+    store = _cdx_store(path)
+    return store.data_path(store.read_meta(spark))
 
 
 def compact_cdx_parquet(spark: SparkSession, path: str) -> None:
     """Rewrite the columnar index with per-partition sorted files —
     folds the small files appends accumulate and restores tight
-    row-group stats; run it off the probe path.
-
-    Crash-safety: the compacted table is written to a TEMP SIBLING
-    directory first, then swapped in with two renames (current ->
-    ``.bak``, temp -> current) and the backup dropped only after the
-    swap — the live index survives a mid-job failure at every point
-    (a static Spark ``overwrite`` deletes the existing files BEFORE
-    the new write commits, so a lost executor or storage pressure
-    mid-rewrite would destroy the only copy; the former full-table
-    ``localCheckpoint`` staging also pinned the whole 10^10-row table
-    in executor storage, which does not scale). If a previous run
-    died between the two renames (current missing, ``.bak`` present),
-    the backup is restored before compacting. Renames go through
-    ``pyarrow.fs`` so the same code serves local paths and HDFS-like
-    ``scheme://`` URIs whose filesystems implement directory move
-    (atomic on POSIX and HDFS). S3-likes get the ``_fs_move_dir``
-    fallback — pyarrow's ``S3FileSystem.move`` rejects directories
-    (prefixes), so each swap step becomes a recursive per-file copy
-    then a source delete: never destructive (every byte lands before
-    anything is deleted) but NOT atomic. Because a crash mid-copy or
-    mid-delete can leave a PARTIAL ``current`` beside a complete
-    ``.bak``, recovery keys on the fallback's ``_GS_MOVE_COMPLETE``
-    sentinel, not on mere existence: a ``current`` that lacks the
-    sentinel while ``.bak`` carries one is a truncated copy and is
-    discarded in favor of the backup (without the sentinel the re-run
-    would delete the only complete copies and silently compact the
-    truncated index — permanent data loss). On the atomic-rename path
-    no sentinel is ever written and the existence-keyed rule alone is
-    sound. For busy S3 indexes still prefer parking the table under a
-    versioned prefix and swapping a pointer/manifest."""
-    from pyarrow import fs as pafs
-
-    if re.match(r"^[a-z][a-z0-9+.\-]*://", path):
-        filesystem, p = pafs.FileSystem.from_uri(path)
-    else:
-        filesystem, p = pafs.LocalFileSystem(), _strip_file_scheme(path)
-    p = p.rstrip("/")
-    tmp, bak = p + ".compact-tmp", p + ".bak"
-    cur_missing = filesystem.get_file_info(p).type == pafs.FileType.NotFound
-    bak_present = filesystem.get_file_info(bak).type != pafs.FileType.NotFound
-    if cur_missing and bak_present:
-        # a previous run died between the two renames — roll back
-        _fs_move_dir(filesystem, bak, p)
-    elif (
-        not cur_missing
-        and bak_present
-        and _has_move_sentinel(filesystem, bak)
-        and not _has_move_sentinel(filesystem, p)
-    ):
-        # non-atomic fallback crashed mid-copy of tmp->current or
-        # mid-delete of current->bak: the sentinel-less current is a
-        # PARTIAL copy and the sentinel-bearing backup is the only
-        # complete index — discard the partial (a plain restore-over
-        # would leave orphan files from the other layout) and restore
-        filesystem.delete_dir(p)
-        _fs_move_dir(filesystem, bak, p)
-    for stale in (tmp, bak):
-        if filesystem.get_file_info(stale).type != pafs.FileType.NotFound:
-            filesystem.delete_dir(stale)
-    # a restore (or a prior run that crashed after dropping .bak)
-    # leaves the sentinel inside the live table; clear it so the
-    # in-flight invariant "current carries a sentinel only once the
-    # replacement copy is complete" holds for THIS run's swap
-    _delete_move_sentinel(filesystem, p)
-    cur = spark.read.parquet(path)
+    row-group stats; run it off the probe path. The rewrite is
+    published as a new version (``sources/store.py``): the live index
+    stays readable at every step, on object stores too."""
+    store = _cdx_store(path)
+    meta, src = store.locate(spark)
+    if src is None:
+        raise FileNotFoundError(f"compact_cdx_parquet: no index at {path}")
     cols = [c.split()[0] for c in CDX_SCHEMA.split(", ")]
-    (
-        cur.select(*cols, "tld")
-        .repartition("tld")
-        .sortWithinPartitions("urlkey", "timestamp")
-        .write.mode("overwrite")
-        .partitionBy("tld")
-        # Spark addresses the temp dir by the caller's own naming
-        # (full URI when path is one); pyarrow moves use the
-        # from_uri-stripped twin of the same name
-        .parquet(path.rstrip("/") + ".compact-tmp")
-    )
-    _fs_move_dir(filesystem, p, bak)
-    _fs_move_dir(filesystem, tmp, p)
-    filesystem.delete_dir(bak)
-    # keep the sentinel until the backup is gone (a crash during the
-    # bak delete may leave a partial .bak that still carries ITS
-    # sentinel — current's own sentinel is what proves current whole
-    # in that window), then clear it from the steady-state table
-    _delete_move_sentinel(filesystem, p)
+    cur = spark.read.parquet(src).select(*cols, "tld")
+
+    def write(dst: str, mode: str) -> None:
+        (
+            cur.repartition("tld")
+            .sortWithinPartitions("urlkey", "timestamp")
+            .write.mode(mode)
+            .partitionBy("tld")
+            .parquet(dst)
+        )
+
+    store.publish(spark, meta or {}, write, meta or {})
 
 
 def probe_cdx_parquet(index: DataFrame, urlkey_prefix: str) -> DataFrame:

@@ -153,6 +153,18 @@ class _BatchStamper:
         )
 
 
+def _flat_rows(spark, path: str, stamp: int) -> DataFrame:
+    """A flat store's rows minus this batch's own replayed append
+    (stores written before the ``batch_id`` stamp cannot tell a replay
+    from history and are read whole)."""
+    from ..sources.store import _exclude_batch_filter
+
+    store = spark.read.parquet(path)
+    if "batch_id" in store.columns:
+        store = _exclude_batch_filter(store, store.schema, stamp)
+    return store
+
+
 def stream_dedup_incremental(
     stream_df: DataFrame,
     store_dir: str,
@@ -201,14 +213,13 @@ def stream_dedup_incremental(
     streams sharing one store are not supported — fan unioned sources
     into one stream instead.
 
-    Round 15: BOTH layouts freeze the SIGNING RECIPE (shingle grain,
-    seed, num_hashes, hash family, cjk routing — ``minhash_signing``)
-    at first batch — the bucketed store in its ``store_meta.json``,
-    the flat store in a ``flat_signing.json`` sidecar — and assert it
-    every batch, so a stream restarted under a different recipe fails
-    loudly instead of silently banding incomparable signatures.
-    Stores seeded before round 15 carry no frozen recipe and cannot
-    detect the drift.
+    BOTH layouts freeze the SIGNING RECIPE (shingle grain, seed,
+    num_hashes, hash family, cjk routing — ``minhash_signing``) at
+    first batch — the bucketed store in its ``store_meta.json``, the
+    flat store in a ``flat_signing.json`` sidecar — and assert it every
+    batch, so a stream restarted under a different recipe fails loudly
+    instead of silently banding incomparable signatures. Stores seeded
+    before recipes were frozen cannot detect the drift.
 
     ``bucketed=True`` keeps the store in the band-hash-bucketed layout
     (``write_signature_store``): each micro-batch's candidate join then
@@ -225,15 +236,9 @@ def stream_dedup_incremental(
         minhash_signing,
         write_signature_store,
     )
-    from ..sources.fs import (
-        hadoop_path_exists,
-        join_uri,
-        read_text_file,
-        write_text_file,
-    )
-    import json
+    from ..sources.fs import join_uri
+    from ..sources.store import commit_meta, open_flat_store, read_meta
 
-    sig_path = join_uri(store_dir, "signatures.parquet")
     meta_path = join_uri(store_dir, "store_meta.json")
     stamper = _BatchStamper(checkpoint_dir)
 
@@ -253,7 +258,7 @@ def stream_dedup_incremental(
             cjk_routed=cjk is not None,
             cjk_shingle_n=cjk_shingle_n,
         )
-        if not hadoop_path_exists(spark, meta_path):
+        if read_meta(spark, meta_path) is None:
             # first batch: freeze the banding params, the SIGNING
             # RECIPE, and the batch_id provenance column into an empty
             # store — a restart under a different shingle grain then
@@ -307,57 +312,37 @@ def stream_dedup_incremental(
             cjk_shingle_n=minhash_kwargs.get("cjk_shingle_n", 5),
         )
 
-    def _check_flat_signing(spark) -> dict:
-        # the FLAT store's twin of the bucketed meta contract (round
-        # 15): the signing recipe is frozen into a sidecar on the
-        # first batch and asserted on every later one, so a stream
-        # restarted under a different shingle grain/seed/routing fails
-        # loudly instead of silently banding incomparable signatures.
-        # Stores seeded before round 15 carry no sidecar and cannot
-        # detect the drift (documented migration hazard).
+    def _check_flat_signing(spark) -> None:
+        # the flat store's twin of the bucketed meta contract: the
+        # signing recipe is frozen into a sidecar on the first batch
+        # and asserted on every later one
         from ..operators.dedup import _check_signing
 
         signing = _signing_from_kwargs()
         flat_meta = join_uri(store_dir, "flat_signing.json")
-        if hadoop_path_exists(spark, flat_meta):
-            frozen = json.loads(read_text_file(spark, flat_meta))
+        frozen = read_meta(spark, flat_meta)
+        if frozen is not None:
             _check_signing(
                 {"signing": frozen}, signing, "stream_dedup_incremental"
             )
         else:
-            write_text_file(spark, flat_meta, json.dumps(signing))
-        return signing
+            commit_meta(spark, flat_meta, signing)
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
         spark = batch_df.sparkSession
         stamp = stamper.stamp(spark, batch_id)
-        # heal a crashed compaction of the flat store before the
-        # existence check (round 16 — the media/url/domain readers'
-        # contract): a compact_flat_store swap that died between its
-        # two renames parks the signatures in .pre-compact, and
-        # reading "missing" as "empty" would re-accept every
-        # previously seen near-duplicate
-        from ..operators.dedup import recover_flat_store
-
-        recover_flat_store(spark, store_dir, "signatures.parquet")
+        sig_path = open_flat_store(
+            spark,
+            store_dir,
+            "signatures.parquet",
+            minhash_signatures(batch_df.limit(0), id_col, text_col)
+            .withColumn("batch_id", F.lit(None).cast("long"))
+            .schema,
+        )
         _check_flat_signing(spark)
-        if hadoop_path_exists(spark, sig_path):
-            store = spark.read.parquet(sig_path)
-            if "batch_id" in store.columns:
-                # replay exclusion: rows this very batch appended before
-                # a crash are not "history", they are our own output.
-                # (Guarded — unlike the bucketed stores — because a flat
-                # store written before the stamp column existed is still
-                # readable; it just can't distinguish a replay.)
-                from ..operators.dedup import _exclude_batch_filter
-
-                store = _exclude_batch_filter(
-                    store, store.schema, stamp
-                ).drop("batch_id")
-        else:
-            store = minhash_signatures(batch_df.limit(0), id_col, text_col)
+        store = _flat_rows(spark, sig_path, stamp).drop("batch_id")
         survivors, sigs = dedup_minhash_incremental(
             batch_df, store, id_col, text_col, threshold=threshold, **minhash_kwargs
         )
@@ -450,15 +435,14 @@ def stream_media_dedup(
     rows (non-media/undecodable) always pass through and are never
     stored.
 
-    Round 16: the store freezes its SIGNING RECIPE (``media_signing``
-    — hash kind, grid size, and for video the frame-sampling policy)
-    into a ``media_signing.json`` sidecar on the first batch and
-    asserts it every batch, closing the one durable store the
-    round-15 frozen-recipe sweep missed: a stream resumed under a
-    different vhash sampling mode ("even" vs "first" — 17-38 bits
-    apart on the repo's own trim fixtures) or a different hash family
-    would otherwise silently Hamming-compare incomparable 64-bit
-    codes and accept every duplicate. Pre-hashed streams DECLARE their
+    The store freezes its SIGNING RECIPE (``media_signing`` — hash
+    kind, grid size, and for video the frame-sampling policy) into a
+    ``media_signing.json`` sidecar on the first batch and asserts it
+    every batch: a stream resumed under a different vhash sampling
+    mode ("even" vs "first" — 17-38 bits apart on the repo's own trim
+    fixtures) or a different hash family would otherwise silently
+    Hamming-compare incomparable 64-bit codes and accept every
+    duplicate. Pre-hashed streams DECLARE their
     recipe through ``hash_kind``/``hash_size``/``vhash_*``; legacy
     stores (no sidecar) are treated as the dhash default, and a store
     legitimately built under another recipe is migrated with
@@ -467,10 +451,8 @@ def stream_media_dedup(
     it is recorded in the sidecar for provenance and a drifted resume
     logs a warning (the acceptance radius changed — earlier batches
     admitted under the old radius stay admitted) but does not raise."""
-    import json
     import logging
 
-    from ..operators.dedup import _exclude_batch_filter, recover_flat_store
     from ..operators.imagehash import (
         MEDIA_SIGNING_SIDECAR,
         check_media_signing,
@@ -478,21 +460,17 @@ def stream_media_dedup(
         media_dedup_incremental,
         media_signing,
     )
-    from ..sources.fs import (
-        hadoop_path_exists,
-        join_uri,
-        read_text_file,
-        write_text_file,
-    )
+    from ..sources.fs import join_uri
+    from ..sources.store import commit_meta, flat_store, read_meta
 
     declared = media_signing(hash_kind, hash_size, vhash_sample, vhash_n_frames)
-    hash_path = join_uri(store_dir, "hashes.parquet")
+    hashes = flat_store(store_dir, "hashes.parquet")
     sidecar_path = join_uri(store_dir, MEDIA_SIGNING_SIDECAR)
     stamper = _BatchStamper(checkpoint_dir)
 
-    def _check_store_signing(spark) -> None:
-        if hadoop_path_exists(spark, sidecar_path):
-            meta = json.loads(read_text_file(spark, sidecar_path))
+    def _check_store_signing(spark, fresh: bool) -> None:
+        meta = read_meta(spark, sidecar_path)
+        if meta is not None:
             check_media_signing(
                 meta.get("signing"), declared, "stream_media_dedup"
             )
@@ -505,15 +483,15 @@ def stream_media_dedup(
                     max_hamming,
                     meta.get("max_hamming"),
                 )
-        elif hadoop_path_exists(spark, hash_path):
+        elif not fresh:
             # legacy store seeded before the sidecar existed: dhash
             # default is the only recipe the pre-sidecar code produced
             check_media_signing(None, declared, "stream_media_dedup")
         else:
-            write_text_file(
+            commit_meta(
                 spark,
                 sidecar_path,
-                json.dumps({"signing": declared, "max_hamming": max_hamming}),
+                {"signing": declared, "max_hamming": max_hamming},
             )
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
@@ -521,22 +499,17 @@ def stream_media_dedup(
             return
         spark = batch_df.sparkSession
         stamp = stamper.stamp(spark, batch_id)
-        # a compaction that crashed mid-swap leaves the data path absent
-        # with the keys parked in .pre-compact — restore them rather
-        # than reading "empty" and re-accepting every seen hash.
-        # MUST run before the signing check: in that crash window a
-        # legacy store would otherwise look like a FRESH one and a
-        # drifted recipe would self-attest, bypassing the legacy guard
-        recover_flat_store(spark, store_dir, "hashes.parquet")
-        _check_store_signing(spark)
-        if hadoop_path_exists(spark, hash_path):
-            store = spark.read.parquet(hash_path)
-            if "batch_id" in store.columns:
-                store = _exclude_batch_filter(
-                    store, store.schema, stamp
-                ).drop("batch_id")
-        else:
-            store = spark.createDataFrame([], "id long, hash long")
+        # locate before the signing check: a store an older release
+        # left mid-compaction must raise, not look fresh and let a
+        # drifted recipe self-attest
+        _, hash_path = hashes.locate(spark)
+        _check_store_signing(spark, fresh=hash_path is None)
+        if hash_path is None:
+            id_type = batch_df.schema[id_col].dataType.simpleString()
+            hash_path = hashes.create_empty(
+                spark, f"id {id_type}, hash long, batch_id long"
+            )
+        store = _flat_rows(spark, hash_path, stamp).drop("batch_id")
         if hash_col in batch_df.columns:
             hashed = batch_df
         else:
@@ -591,11 +564,9 @@ def stream_url_dedup(
     are ~a URL each — the store stays tiny relative to page payloads,
     which never enter the join at all.
     """
-    from ..operators.dedup import _exclude_batch_filter, recover_flat_store
     from ..operators.weburl import url_dedup_incremental
-    from ..sources.fs import hadoop_path_exists, join_uri
+    from ..sources.store import open_flat_store
 
-    url_path = join_uri(store_dir, "urls.parquet")
     stamper = _BatchStamper(checkpoint_dir)
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
@@ -603,17 +574,10 @@ def stream_url_dedup(
             return
         spark = batch_df.sparkSession
         stamp = stamper.stamp(spark, batch_id)
-        # heal a crashed compaction (see recover_flat_store) before the
-        # missing-store-means-empty branch below can misfire
-        recover_flat_store(spark, store_dir, "urls.parquet")
-        if hadoop_path_exists(spark, url_path):
-            store = spark.read.parquet(url_path)
-            if "batch_id" in store.columns:
-                store = _exclude_batch_filter(
-                    store, store.schema, stamp
-                ).drop("batch_id")
-        else:
-            store = spark.createDataFrame([], "url_norm string")
+        url_path = open_flat_store(
+            spark, store_dir, "urls.parquet", "url_norm string, batch_id long"
+        )
+        store = _flat_rows(spark, url_path, stamp).drop("batch_id")
         survivors, keys = url_dedup_incremental(
             batch_df, store, url_col, id_col
         )
@@ -670,13 +634,11 @@ def stream_domain_caps(
     grows one row per ACTIVE domain per batch and compacts to one row
     per domain — never corpus-sized."""
     from ..functions.sampling import epoch_shuffle_expr
-    from ..operators.dedup import _exclude_batch_filter, recover_flat_store
     from ..operators.weburl import with_registered_domain
-    from ..sources.fs import hadoop_path_exists, join_uri
+    from ..sources.store import open_flat_store
 
     if cap < 1:
         raise ValueError(f"cap must be >= 1, got {cap}")
-    dom_path = join_uri(store_dir, "domains.parquet")
     stamper = _BatchStamper(checkpoint_dir)
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
@@ -684,17 +646,16 @@ def stream_domain_caps(
             return
         spark = batch_df.sparkSession
         stamp = stamper.stamp(spark, batch_id)
-        recover_flat_store(spark, store_dir, "domains.parquet")
-        if hadoop_path_exists(spark, dom_path):
-            store = spark.read.parquet(dom_path)
-            store = _exclude_batch_filter(store, store.schema, stamp)
-            counts = (
-                store.dropDuplicates(["domain", "batch_id"])
-                .groupBy("domain")
-                .agg(F.sum("cnt").alias("__prior"))
-            )
-        else:
-            counts = spark.createDataFrame([], "domain string, __prior long")
+        dom_path = open_flat_store(
+            spark, store_dir, "domains.parquet",
+            "domain string, cnt long, batch_id long",
+        )
+        counts = (
+            _flat_rows(spark, dom_path, stamp)
+            .dropDuplicates(["domain", "batch_id"])
+            .groupBy("domain")
+            .agg(F.sum("cnt").alias("__prior"))
+        )
         keyed = with_registered_domain(batch_df, url_col, "__dom")
         order_key = epoch_shuffle_expr(id_col, seed)
         w = Window.partitionBy("__dom").orderBy(order_key.asc())
@@ -994,7 +955,7 @@ def stream_curation_filter(
     NULL), so the drop-rate monitor and the survivor sink read one
     frame; fingerprints of kept rows are then appended to the store.
 
-    ``license_screen=True`` (round 11) adds the batch pipeline's
+    ``license_screen=True`` adds the batch pipeline's
     license/copyright stage at the same priority (after 'duplicate',
     before 'gopher'): the output gains ``has_copyright`` /
     ``rights_reserved`` / ``license_name`` / ``license_ok`` columns
@@ -1002,7 +963,7 @@ def stream_curation_filter(
     copyright notices with no recognized license family). Map-only
     in-row regex — no new state, no new shuffle.
 
-    ``url_col`` + ``blocklist`` (round 11) add the batch pipeline's
+    ``url_col`` + ``blocklist`` add the batch pipeline's
     URL-BLOCKLIST screen at the same TOP priority it has there
     (operators/weburl.py domain_blocklist_flag — eTLD+1-grain, tuple
     -> in-row NOT-isin, DataFrame -> per-batch broadcast join): the
@@ -1014,7 +975,7 @@ def stream_curation_filter(
     pipeline's priority — as ``robots_ok`` + a 'robots' drop reason;
     local lists compile to the in-row when-chain, equally stateless.
 
-    ``clf_model`` (round 12) adds the TRAINED quality classifier
+    ``clf_model`` adds the TRAINED quality classifier
     (operators/classifier.py — pass ``train_logreg_hashed``'s return
     dict) as a FROZEN-model stage, the standard deployment shape:
     train offline on a batch sample, apply per micro-batch. Output
@@ -1024,7 +985,7 @@ def stream_curation_filter(
     REFINES the heuristic quality family). Pure in-row integer
     arithmetic — stateless, no new shuffle, replay-identical.
 
-    ``blocked_terms`` (round 13) adds the C4-style bad-words CONTENT
+    ``blocked_terms`` adds the C4-style bad-words CONTENT
     screen (``functions/text.py blocked_terms_flags_expr`` — the list
     is caller policy, e.g. the public LDNOOBW lists): output gains
     ``terms_ok`` plus ``term_hit_frac``, with a 'blocked_terms'
@@ -1032,7 +993,7 @@ def stream_curation_filter(
     policy outranks quality heuristics, matching where real pipelines
     put it). Map-only, stateless, replay-identical.
 
-    ``cjk_route=True`` (round 13) gives the streaming gopher stage the
+    ``cjk_route=True`` gives the streaming gopher stage the
     batch pipeline's script-aware CJK routing: each document's
     language is identified in-row (``lang_id_expr`` — emitted as a
     ``lang`` column for drop-rate monitoring), and CJK-routed rows
@@ -1041,19 +1002,15 @@ def stream_curation_filter(
     rules that structurally fail on unsegmented prose. Map-only and
     stateless like the rest of the stage — replay-identical, and the
     verdict equals the batch routed-gopher verdict for the same text
-    (pinned in tests). Default ON since round 14, matching the batch
-    pipeline's now-routed gopher stage (stream and batch must agree
-    by default); a stream checkpointed under the round-13 default
-    should pass ``cjk_route=False`` explicitly to keep byte-identical
-    verdicts across the upgrade (the flag only changes verdicts for
-    CJK-script documents, and adds the ``lang`` monitoring column).
-    Round 15: the flag is FROZEN into the store's meta at seeding
-    (``curation_cjk_route``) and asserted every batch, so a resumed
-    stream whose flag drifted from the store's raises instead of
-    silently changing verdicts; stores seeded before round 15 carry
-    no frozen flag and cannot detect the mismatch.
+    (pinned in tests). Default ON, matching the batch pipeline's
+    routed gopher stage; ``cjk_route=False`` keeps word-grain verdicts
+    for CJK-script documents. The flag is FROZEN into the store's meta
+    at seeding (``curation_cjk_route``) and asserted every batch, so a
+    resumed stream whose flag drifted from the store's raises instead
+    of silently changing verdicts; stores seeded before the freeze
+    carry no flag and cannot detect the mismatch.
 
-    ``domain_ranks`` (round 15, requires ``url_col``) adds the batch
+    ``domain_ranks`` (requires ``url_col``) adds the batch
     pipeline's domain-authority ANNOTATE stage: a FROZEN offline rank
     artifact — a ``[(domain, rank), ...]`` list or a (node, rank)
     DataFrame, e.g. ``operators/linkgraph.py pagerank`` output or
@@ -1064,7 +1021,7 @@ def stream_curation_filter(
     downstream sampling weights / classifier features. Stateless and
     map-side — replay-identical, no new shuffle, the standard
     frozen-model deployment shape (the clf_model/stream_dsir pattern).
-    Round 16: the snapshot's IDENTITY (row count + order-independent
+    The snapshot's IDENTITY (row count + order-independent
     xxhash64 checksum on the 1e-9 rank grid) is stamped into the
     store meta at seeding (``domain_rank_sig``); a resume under a
     different snapshot logs a warning — annotate-only, so a swapped
@@ -1106,6 +1063,7 @@ def stream_curation_filter(
         write_fingerprint_store,
     )
     from ..sources.fs import hadoop_path_exists, join_uri
+    from ..sources.store import read_meta
 
     meta_path = join_uri(store_dir, "store_meta.json")
     stamper = _BatchStamper(checkpoint_dir)
@@ -1116,7 +1074,7 @@ def stream_curation_filter(
         )
 
     def _rank_sig(spark) -> dict | None:
-        # round 16 (VERDICT #7): the rank snapshot's identity — row
+        # the rank snapshot's identity — row
         # count + order-independent bit_xor of xxhash64(node, micro-
         # rank on the 1e-9 integer grid the pagerank oracle uses).
         # One tiny aggregation at stream construction (the rank table
@@ -1155,7 +1113,7 @@ def stream_curation_filter(
         stamp = stamper.stamp(spark, batch_id)
         if not rank_sig_box:
             rank_sig_box.append(_rank_sig(spark))
-        if not hadoop_path_exists(spark, meta_path):
+        if read_meta(spark, meta_path) is None:
             legacy = join_uri(store_dir, "fingerprints.parquet")
             if hadoop_path_exists(spark, legacy):
                 # pre-bucketed-layout store: silently seeding a fresh
@@ -1179,7 +1137,7 @@ def stream_curation_filter(
                 num_buckets=num_buckets,
                 extra_meta={
                     "curation_cjk_route": bool(cjk_route),
-                    # round 16: rank-snapshot PROVENANCE (row count +
+                    # rank-snapshot PROVENANCE (row count +
                     # checksum). Unlike cjk_route this is annotate-only
                     # (verdicts never depend on it), so drift WARNS
                     # instead of raising — swapping in next month's
@@ -1203,7 +1161,7 @@ def stream_curation_filter(
                 )
         frozen_route = meta_now.get("curation_cjk_route")
         if frozen_route is not None and bool(frozen_route) != bool(cjk_route):
-            # legacy stores (seeded before round 15) carry no key and
+            # legacy stores (seeded before the freeze) carry no key and
             # cannot detect a mismatch — documented migration hazard
             raise ValueError(
                 "stream_curation_filter: this store was seeded with "
@@ -1296,7 +1254,7 @@ def stream_curation_filter(
                 (~_bt.getField("blocked")).alias("terms_ok"),
                 _bt.getField("hit_frac").alias("term_hit_frac"),
             ]
-        # quality routes with the gopher stage (round 14): the staged
+        # quality routes with the gopher stage: the staged
         # __lang exists exactly when cjk_route is on, and the batch
         # pipeline's quality stage routes by the same predicate
         q_expr = (
@@ -1550,7 +1508,8 @@ def stream_semantic_dedup(
         semantic_dedup_incremental,
         write_semantic_store,
     )
-    from ..sources.fs import hadoop_path_exists, join_uri
+    from ..sources.fs import join_uri
+    from ..sources.store import read_meta
 
     meta_path = join_uri(store_dir, "store_meta.json")
     stamper = _BatchStamper(checkpoint_dir)
@@ -1560,7 +1519,7 @@ def stream_semantic_dedup(
             return
         spark = batch_df.sparkSession
         stamp = stamper.stamp(spark, batch_id)
-        if not hadoop_path_exists(spark, meta_path):
+        if read_meta(spark, meta_path) is None:
             # seed: freeze the quantizer on an EMPTY store, then run the
             # batch through the normal incremental path so within-batch
             # duplicates are still caught on the very first batch

@@ -680,6 +680,7 @@ def test_cdx_parquet_append_and_compact(spark, crawl_dir, tmp_path):
     import glob as _glob
 
     from gluestick_ts_spark.sources.cdx import (
+        _cdx_data_path,
         append_cdx_parquet,
         compact_cdx_parquet,
         probe_cdx_parquet,
@@ -702,21 +703,21 @@ def test_cdx_parquet_append_and_compact(spark, crawl_dir, tmp_path):
     compact_cdx_parquet(spark, out)
     after = read_cdx_parquet(spark, out)
     assert after.count() == 12
-    assert len(_glob.glob(f"{out}/tld=com/*.parquet")) <= n_files
+    data = _cdx_data_path(spark, out)
+    assert 0 < len(_glob.glob(f"{data}/tld=com/*.parquet")) <= n_files
     assert before_rows == sorted(map(key, after.collect()))
-    # swap hygiene: no temp/backup sibling left behind
+    # the compacted index lives in one version dir under the index
+    # path; the legacy partitions are swept
     import os as _os
 
-    assert not _os.path.exists(out + ".compact-tmp")
-    assert not _os.path.exists(out + ".bak")
-    # crash-recovery: a run that died BETWEEN the two renames leaves
-    # (path missing, path.bak present) — the next compact restores the
-    # backup first and completes with identical rows
-    _os.rename(out, out + ".bak")
-    compact_cdx_parquet(spark, out)
-    recovered = read_cdx_parquet(spark, out)
-    assert before_rows == sorted(map(key, recovered.collect()))
-    assert not _os.path.exists(out + ".bak")
+    assert sorted(n for n in _os.listdir(out) if not n.startswith(".")) == [
+        "_store_meta.json", "_v1",
+    ]
+    # appends after compaction land in the live version
+    append_cdx_parquet(idx.where("status = 404"), out)
+    assert read_cdx_parquet(spark, out).count() == 12 + idx.where(
+        "status = 404"
+    ).count()
 
 
 def test_surt_twins_property(spark):
@@ -760,204 +761,3 @@ def test_surt_twins_property(spark):
     want = [surt(u) for u in cases]
     mism = [(c, g, w) for c, g, w in zip(cases, got, want) if g != w]
     assert not mism, mism[:5]
-
-
-def test_fs_move_dir_object_store_fallback(tmp_path):
-    """_fs_move_dir (round 15): filesystems whose move() rejects
-    directories — pyarrow's S3FileSystem refuses prefix moves — fall
-    back to recursive per-file copy + source delete with identical
-    end state (bytes land before anything is deleted); move-capable
-    filesystems keep the native one-call rename."""
-    from pyarrow import fs as pafs
-
-    from gluestick_ts_spark.sources.cdx import _fs_move_dir
-
-    class S3LikeFS:
-        """Delegates to LocalFileSystem but refuses directory moves,
-        the S3FileSystem behavior the fallback exists for."""
-
-        def __init__(self):
-            self._fs = pafs.LocalFileSystem()
-            self.moves = 0
-
-        def move(self, src, dst):
-            if self._fs.get_file_info(src).type == pafs.FileType.Directory:
-                raise NotImplementedError(
-                    "Move expected to fail: S3 does not move directories"
-                )
-            self._fs.move(src, dst)
-
-        def __getattr__(self, name):
-            return getattr(self._fs, name)
-
-    src = tmp_path / "srcdir"
-    (src / "tld=com").mkdir(parents=True)
-    (src / "tld=org" / "deeper").mkdir(parents=True)
-    (src / "part-0.parquet").write_bytes(b"root-bytes")
-    (src / "tld=com" / "part-1.parquet").write_bytes(b"com-bytes")
-    (src / "tld=org" / "deeper" / "part-2.parquet").write_bytes(b"org-bytes")
-    dst = tmp_path / "dstdir"
-    fs = S3LikeFS()
-    _fs_move_dir(fs, str(src), str(dst))
-    assert not src.exists()
-    assert (dst / "part-0.parquet").read_bytes() == b"root-bytes"
-    assert (dst / "tld=com" / "part-1.parquet").read_bytes() == b"com-bytes"
-    assert (
-        dst / "tld=org" / "deeper" / "part-2.parquet"
-    ).read_bytes() == b"org-bytes"
-
-    # move-capable path: one native rename, no copy fan-out
-    class CountingFS(S3LikeFS):
-        def move(self, src, dst):
-            self.moves += 1
-            self._fs.move(src, dst)
-
-    src2 = tmp_path / "src2"
-    src2.mkdir()
-    (src2 / "f").write_bytes(b"x")
-    fs2 = CountingFS()
-    _fs_move_dir(fs2, str(src2), str(tmp_path / "dst2"))
-    assert fs2.moves == 1 and (tmp_path / "dst2" / "f").read_bytes() == b"x"
-
-
-def test_fs_move_dir_fallback_sentinel(tmp_path):
-    """Round 16: the non-atomic fallback attests completeness — a
-    ``_GS_MOVE_COMPLETE`` sentinel lands in dst AFTER the data bytes
-    and before src is deleted, and a stale sentinel already inside
-    src is NOT copied (only a fresh sentinel attests THIS move)."""
-    from pyarrow import fs as pafs
-
-    from gluestick_ts_spark.sources.cdx import (
-        _MOVE_SENTINEL,
-        _fs_move_dir,
-    )
-
-    class S3LikeFS:
-        def __init__(self):
-            self._fs = pafs.LocalFileSystem()
-
-        def move(self, src, dst):
-            raise NotImplementedError("S3 does not move directories")
-
-        def __getattr__(self, name):
-            return getattr(self._fs, name)
-
-    src = tmp_path / "src"
-    src.mkdir()
-    (src / "data.parquet").write_bytes(b"bytes")
-    # stale sentinel from an earlier fallback move into this dir
-    (src / _MOVE_SENTINEL).write_bytes(b"stale-payload")
-    dst = tmp_path / "dst"
-    _fs_move_dir(S3LikeFS(), str(src), str(dst))
-    assert not src.exists()
-    assert (dst / "data.parquet").read_bytes() == b"bytes"
-    # fresh (empty) sentinel, not the stale payload copied over
-    assert (dst / _MOVE_SENTINEL).read_bytes() == b""
-
-
-def test_fs_move_dir_transient_oserror_reraises(tmp_path):
-    """Round 16 (ADVICE): a transient I/O failure of a native rename
-    on a rename-capable filesystem must RE-RAISE, not silently
-    degrade to the non-atomic copy+delete path."""
-    from pyarrow import fs as pafs
-
-    from gluestick_ts_spark.sources.cdx import _fs_move_dir
-
-    class FlakyFS:
-        def __init__(self):
-            self._fs = pafs.LocalFileSystem()
-
-        def move(self, src, dst):
-            raise OSError("Connection reset by peer")
-
-        def __getattr__(self, name):
-            return getattr(self._fs, name)
-
-    src = tmp_path / "src"
-    src.mkdir()
-    (src / "f").write_bytes(b"x")
-    with pytest.raises(OSError, match="Connection reset"):
-        _fs_move_dir(FlakyFS(), str(src), str(tmp_path / "dst"))
-    # nothing moved, nothing deleted
-    assert (src / "f").read_bytes() == b"x"
-    assert not (tmp_path / "dst").exists()
-
-
-def test_compact_recovery_partial_current_restores_backup(
-    spark, crawl_dir, tmp_path
-):
-    """Round 16 (ADVICE high): object-store crash shape — the
-    non-atomic swap died mid-copy, leaving a PARTIAL current dir (no
-    sentinel) beside a complete sentinel-bearing ``.bak``. Recovery
-    must discard the partial and restore the backup; the pre-16 rule
-    ("current exists -> keep it") would compact the truncated index
-    and silently lose rows."""
-    import glob as _glob
-    import shutil
-
-    from gluestick_ts_spark.sources.cdx import (
-        _MOVE_SENTINEL,
-        compact_cdx_parquet,
-        read_cdx_parquet,
-        write_cdx_parquet,
-    )
-
-    import os as _os
-
-    out = str(tmp_path / "ccidx")
-    idx = index_warc(spark, crawl_dir)
-    write_cdx_parquet(idx, out)
-    key = lambda r: (r.urlkey, r.timestamp, r.offset, r.rec_offset)  # noqa: E731
-    full_rows = sorted(map(key, read_cdx_parquet(spark, out).collect()))
-    assert full_rows
-    # complete backup carries the fallback's copy-complete sentinel
-    shutil.copytree(out, out + ".bak")
-    (tmp_path / "ccidx.bak" / _MOVE_SENTINEL).write_bytes(b"")
-    # truncate current: a crash mid-copy left a subset of the rows
-    # (and a different file layout than the backup — orphan files
-    # must not survive the restore)
-    shutil.rmtree(out)
-    write_cdx_parquet(idx.where("status = 200"), out)
-    truncated = read_cdx_parquet(spark, out).count()
-    assert 0 < truncated < len(full_rows)
-    assert _glob.glob(out + "/tld=*/*.parquet")
-    compact_cdx_parquet(spark, out)
-    after = sorted(map(key, read_cdx_parquet(spark, out).collect()))
-    assert after == full_rows
-    assert not _os.path.exists(out + ".bak")
-    assert not _os.path.exists(out + ".compact-tmp")
-    assert not _os.path.exists(out + "/" + _MOVE_SENTINEL)
-
-
-def test_compact_recovery_complete_current_keeps_current(
-    spark, crawl_dir, tmp_path
-):
-    """Round 16: the dual crash shape — swap finished (current is
-    complete and still carries its sentinel) but the run died while
-    deleting ``.bak``, leaving a partial backup that RETAINS its own
-    sentinel. Recovery must keep current (its sentinel proves it
-    whole), drop the stale backup, and clear the steady-state
-    sentinel."""
-    import os as _os
-
-    from gluestick_ts_spark.sources.cdx import (
-        _MOVE_SENTINEL,
-        compact_cdx_parquet,
-        read_cdx_parquet,
-        write_cdx_parquet,
-    )
-
-    out = str(tmp_path / "ccidx2")
-    write_cdx_parquet(index_warc(spark, crawl_dir), out)
-    key = lambda r: (r.urlkey, r.timestamp, r.offset, r.rec_offset)  # noqa: E731
-    full_rows = sorted(map(key, read_cdx_parquet(spark, out).collect()))
-    (tmp_path / "ccidx2" / _MOVE_SENTINEL).write_bytes(b"")
-    # partial backup: just the sentinel and one stray dir survive
-    _os.makedirs(out + ".bak/tld=com")
-    with open(out + ".bak/" + _MOVE_SENTINEL, "wb"):
-        pass
-    compact_cdx_parquet(spark, out)
-    after = sorted(map(key, read_cdx_parquet(spark, out).collect()))
-    assert after == full_rows
-    assert not _os.path.exists(out + ".bak")
-    assert not _os.path.exists(out + "/" + _MOVE_SENTINEL)

@@ -20,8 +20,15 @@ from gluestick_ts_spark.operators.dedup import (
 )
 from gluestick_ts_spark.operators.asof import asof_join
 from gluestick_ts_spark.operators.similarity import ann_ivf_topk, ann_lsh_topk, cosine_topk
+from gluestick_ts_spark.sources.store import Store
 
 BASE = "the quick brown fox jumps over the lazy dog and runs far away home tonight"
+
+
+def _data_dir(spark, path, legacy):
+    """A store's current data dir, resolved through its meta."""
+    store = Store(path, legacy)
+    return store.data_path(store.read_meta(spark))
 
 
 @pytest.fixture()
@@ -1322,7 +1329,7 @@ def test_compact_signature_store(spark, docs, tmp_path):
     assert len(files_before) > 4  # more files than buckets pre-compaction
 
     compact_signature_store(spark, path)
-    after = spark.read.parquet(path + "/banded")
+    after = spark.read.parquet(_data_dir(spark, path, "banded"))
     assert sorted((r.id, r.band, r.band_hash) for r in after.collect()) == rows_before
     per_bucket: dict = {}
     for f in after.inputFiles():
@@ -1367,7 +1374,7 @@ def test_compact_fingerprint_store(spark, docs, tmp_path):
     assert len(files_before) > 4
 
     compact_fingerprint_store(spark, path)
-    after_df = spark.read.parquet(path + "/banded")
+    after_df = spark.read.parquet(_data_dir(spark, path, "banded"))
     # full-row dups are gone; distinct fingerprints preserved
     assert after_df.count() == after_df.dropDuplicates().count()
     assert after_df.select("fp").distinct().count() == distinct_before
@@ -2025,7 +2032,7 @@ def test_compact_semantic_store(spark, tmp_path):
     files_before = set(spark.read.parquet(path + "/clusters").inputFiles())
 
     compact_semantic_store(spark, path)
-    after_df = spark.read.parquet(path + "/clusters")
+    after_df = spark.read.parquet(_data_dir(spark, path, "clusters"))
     assert after_df.count() == after_df.dropDuplicates().count()
     per_cid: dict = {}
     for f in after_df.inputFiles():
@@ -2281,7 +2288,7 @@ def test_ivf_store_build_probe_append_compact(spark, tmp_path):
     before_rows = key(ann_ivf_store_topk(queries, path, k=4, n_probe=3))
     compact_ivf_store(spark, path)
     per_cid: dict = {}
-    for f in spark.read.parquet(path + "/lists").inputFiles():
+    for f in spark.read.parquet(_data_dir(spark, path, "lists")).inputFiles():
         cid = [seg for seg in f.split("/") if seg.startswith("cid=")][0]
         per_cid.setdefault(cid, set()).add(f)
     assert per_cid and all(len(v) == 1 for v in per_cid.values())
@@ -2610,35 +2617,3 @@ def test_stamp_width_fold_and_unattested_append_warning(
             path,
         )
     assert any("no attestation" in r.message for r in caplog.records)
-
-
-def test_recover_store_data_heals_crashed_bucketed_compaction(
-    spark, tmp_path
-):
-    """Round 16: the bucketed-store twin of recover_flat_store — a
-    _compact_store_data swap that died between its renames parks the
-    data dir in .pre-compact; the incremental entry points (and the
-    compactor itself) now heal it on next touch instead of raising on
-    the missing path."""
-    import os
-
-    from gluestick_ts_spark.operators.dedup import (
-        dedup_minhash_incremental_bucketed,
-        minhash_signatures,
-        write_signature_store,
-    )
-
-    corpus = spark.createDataFrame(
-        [(1, BASE), (2, "completely different content about spark engines")],
-        "doc_id long, text string",
-    )
-    path = str(tmp_path / "bstore")
-    write_signature_store(minhash_signatures(corpus), path, num_buckets=4)
-    os.rename(path + "/banded", path + "/banded.pre-compact")
-
-    batch = spark.createDataFrame(
-        [(10, BASE.replace("lazy", "sleepy"))], "doc_id long, text string"
-    )
-    got, _ = dedup_minhash_incremental_bucketed(batch, path, threshold=0.7)
-    assert {r.doc_id for r in got.collect()} == set()  # dup caught
-    assert os.path.isdir(path + "/banded")  # healed

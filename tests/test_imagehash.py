@@ -916,19 +916,20 @@ def test_stream_media_dedup_legacy_store_and_stamp(spark, tmp_path):
     with pytest.raises(StreamingQueryException, match="stamp_media_signing"):
         run("ck1", hash_kind="vhash", vhash_sample="even")
 
-    # round 16 ordering corner: a crashed COMPACTION parks the legacy
-    # hashes in .pre-compact with the data path absent — the store
-    # must NOT look fresh in that window (recovery runs before the
-    # signing check), so the drifted declaration still raises instead
-    # of self-attesting over a legacy store
+    # ordering corner: an older release's crashed rename-swap
+    # COMPACTION parks the legacy hashes aside with the data path
+    # absent — the store must NOT look fresh in that window (it is
+    # refused before the signing check), so the drifted declaration
+    # cannot self-attest over a legacy store
     os.rename(
         store + "/hashes.parquet", store + "/hashes.parquet.pre-compact"
     )
-    with pytest.raises(StreamingQueryException, match="stamp_media_signing"):
+    with pytest.raises(StreamingQueryException, match="interrupted compaction"):
         run("ck1b", hash_kind="vhash", vhash_sample="even")
     assert not os.path.exists(store + "/media_signing.json")
-    # recovery healed the park as a side effect
-    assert os.path.exists(store + "/hashes.parquet")
+    os.rename(
+        store + "/hashes.parquet.pre-compact", store + "/hashes.parquet"
+    )
 
     stamp_media_signing(
         spark, store, media_signing("vhash", vhash_sample="even")

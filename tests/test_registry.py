@@ -159,6 +159,7 @@ MODULE_REACH = {
         "record fetch; byte-extent and fetch==scan equality pins in "
         "tests/test_cdx.py (r12)"),
     "sources.fs": (_X, "Hadoop-FS path utilities used by every store"),
+    "sources.store": (_Q, ["ann_ivf_topk", "bm25_search_docs"]),
     "sources.wat": (_X, "WAT metadata sidecar (generate/write/parse + "
         "link-graph edges); round-trip + real-CC-envelope + frontier "
         "composition pins in tests/test_wat.py (r12)"),

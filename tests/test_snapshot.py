@@ -179,3 +179,36 @@ def test_partitioned_snapshot_behind_file_uri(spark, tmp_path):
     partitioned_snapshot_upsert(_df(spark, [(1, "old"), (2, "keep")]), "s", d, pk="id", n_buckets=4)
     out = partitioned_snapshot_upsert(_df(spark, [(1, "new"), (3, "add")]), "s", d, pk="id", n_buckets=4)
     assert {r["id"]: r["v"] for r in out.collect()} == {1: "new", 2: "keep", 3: "add"}
+
+
+@pytest.mark.parametrize("fail_call", [1, 2])
+def test_snapshot_swap_raises_when_a_rename_fails(spark, tmp_path, monkeypatch, fail_call):
+    """A rename that reports failure (Hadoop returns False instead of
+    raising) must raise with the previous snapshot still readable —
+    the unchecked swap used to rename the merged snapshot INTO the
+    still-present target dir, where reads never saw it."""
+    import os
+
+    import gluestick_ts_spark.operators.snapshot as snap
+
+    d = str(tmp_path)
+    snapshot_records(_df(spark, [(1, "old"), (2, "keep")]), "s", d, pk="id")
+    real = snap.rename_path
+    calls = []
+
+    def flaky(spark_, src, dst):
+        calls.append((src, dst))
+        return False if len(calls) == fail_call else real(spark_, src, dst)
+
+    monkeypatch.setattr(snap, "rename_path", flaky)
+    with pytest.raises(IOError, match="could not move"):
+        snapshot_records(_df(spark, [(1, "new"), (3, "add")]), "s", d, pk="id")
+    monkeypatch.undo()
+    snap_dir = os.path.join(d, "s.snapshot.parquet")
+    assert not [n for n in os.listdir(snap_dir) if n.startswith(".s.snapshot")]
+    assert not [n for n in os.listdir(d) if n.startswith(".s.snapshot")]
+    got = {r["id"]: r["v"] for r in read_snapshots(spark, "s", d).collect()}
+    assert got == {1: "old", 2: "keep"}
+    # the next merge goes through
+    out = snapshot_records(_df(spark, [(1, "new")]), "s", d, pk="id")
+    assert {r["id"]: r["v"] for r in out.collect()} == {1: "new", 2: "keep"}

@@ -233,9 +233,12 @@ def test_stream_dedup_incremental(spark, tmp_path):
     sig_ids = {r.id for r in spark.read.parquet(f"{store}/signatures.parquet").collect()}
     assert sig_ids == {1, 2, 11}
 
-    # round 16: a compaction that crashed mid-swap parks the flat
-    # store in .pre-compact — the next batch must HEAL it (not read
-    # "missing" as "empty" and re-accept every stored near-dup)
+    # a flat store whose data dir is gone (e.g. parked aside by an
+    # older release's rename-swap compaction that died mid-swap) is
+    # refused, never read as empty and re-accepting every stored
+    # near-dup
+    from pyspark.errors.exceptions.captured import StreamingQueryException
+
     emitted.clear()
     os.rename(
         f"{store}/signatures.parquet", f"{store}/signatures.parquet.pre-compact"
@@ -243,17 +246,27 @@ def test_stream_dedup_incremental(spark, tmp_path):
     _write_stream_batch(
         src, spark, [(20, base.replace("quick", "swift"))], schema
     )
-    q3 = (
-        stream_dedup_incremental(
-            spark.readStream.schema(schema).parquet(src), store, emit,
-            threshold=0.7, checkpoint_dir=ckpt,
+
+    def run3():
+        q3 = (
+            stream_dedup_incremental(
+                spark.readStream.schema(schema).parquet(src), store, emit,
+                threshold=0.7, checkpoint_dir=ckpt,
+            )
+            .trigger(availableNow=True)
+            .start()
         )
-        .trigger(availableNow=True)
-        .start()
+        q3.awaitTermination(180)
+
+    with pytest.raises(StreamingQueryException, match="signatures.parquet"):
+        run3()
+    assert set().union(*emitted.values(), set()) == set()
+    # restoring the parked copy resumes the stream against it
+    os.rename(
+        f"{store}/signatures.parquet.pre-compact", f"{store}/signatures.parquet"
     )
-    q3.awaitTermination(180)
+    run3()
     assert set().union(*emitted.values(), set()) == set()  # 20 = stored dup
-    assert os.path.exists(f"{store}/signatures.parquet")  # healed
 
 
 def test_stream_dedup_incremental_uri_store(spark, tmp_path):

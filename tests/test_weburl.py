@@ -18,6 +18,13 @@ from gluestick_ts_spark.operators.weburl import (
 )
 
 
+def _flat_data_dir(spark, store_dir, name):
+    """A flat store's current data dir, resolved through its meta."""
+    from gluestick_ts_spark.sources.store import flat_store
+
+    return flat_store(store_dir, name).locate(spark)[1]
+
+
 def _norm(spark, urls):
     df = spark.createDataFrame([(i, u) for i, u in enumerate(urls)], "i long, u string")
     rows = df.select(
@@ -222,15 +229,17 @@ def test_stream_url_dedup(spark, tmp_path):
     }
 
 
-def test_stream_url_dedup_survives_crashed_compaction(spark, tmp_path):
+def test_stream_url_dedup_survives_crashed_compaction(spark, tmp_path, monkeypatch):
     """END-TO-END crashed-compaction durability: a compaction that dies
-    BETWEEN rename(data -> .pre-compact) and rename(.compact-tmp ->
-    data) leaves the store path absent — the next STREAM batch must
-    still reject previously-seen URLs (recovery-on-read restores the
-    pre-compaction keys), never treat the store as empty."""
+    after writing its new version but before committing the meta
+    leaves the previous version live — the next STREAM batch still
+    rejects previously-seen URLs, and the next compaction sweeps the
+    orphaned version."""
     import os
     import shutil
 
+    import gluestick_ts_spark.sources.store as store_mod
+    from gluestick_ts_spark.operators.dedup import compact_flat_store
     from gluestick_ts_spark.streaming.incremental import stream_url_dedup
 
     src = str(tmp_path / "src")
@@ -258,13 +267,16 @@ def test_stream_url_dedup_survives_crashed_compaction(spark, tmp_path):
     run()
     assert set().union(*emitted.values()) == {1, 2}
 
-    # kill a compaction between the two renames: data moved aside, the
-    # compacted tmp written but never moved into place
-    data = f"{store}/urls.parquet"
-    os.rename(data, data + ".pre-compact")
-    os.makedirs(data + ".compact-tmp")
-    open(data + ".compact-tmp/part-stale.parquet", "w").write("junk")
-    assert not os.path.exists(data)
+    # kill a compaction at its commit: the new version is written but
+    # the meta never names it
+    def crash(*_a, **_k):
+        raise RuntimeError("killed")
+
+    with monkeypatch.context() as m:
+        m.setattr(store_mod, "commit_meta", crash)
+        with pytest.raises(RuntimeError, match="killed"):
+            compact_flat_store(spark, store, "urls.parquet", ["url_norm"])
+    assert os.path.isdir(f"{store}/urls.parquet_v1")  # the orphan
 
     emitted.clear()
     spark.createDataFrame(
@@ -272,13 +284,16 @@ def test_stream_url_dedup_survives_crashed_compaction(spark, tmp_path):
          (11, "http://fresh.io/c")], schema
     ).coalesce(1).write.mode("append").parquet(src)
     run()
-    # the re-crawl is REJECTED (store healed from .pre-compact), the
-    # fresh URL survives, and the crash debris is gone
+    # the re-crawl is REJECTED against the live version, the fresh
+    # URL survives
     assert set().union(*emitted.values()) == {11}
-    assert not os.path.exists(data + ".pre-compact")
-    assert not os.path.exists(data + ".compact-tmp")
+    compact_flat_store(spark, store, "urls.parquet", ["url_norm"])
+    assert sorted(n for n in os.listdir(store) if n.startswith("urls")) == [
+        "urls.parquet.meta.json", "urls.parquet_v1",
+    ]
     stored = {
-        r.url_norm for r in spark.read.parquet(data).collect()
+        r.url_norm
+        for r in spark.read.parquet(f"{store}/urls.parquet_v1").collect()
     }
     assert stored == {
         "http://seen.org/a", "http://seen.org/b", "http://fresh.io/c"
@@ -411,11 +426,12 @@ def test_compact_flat_store(spark, tmp_path):
     assert spark.read.parquet(f"{store}/urls.parquet").count() == 3
 
     compact_flat_store(spark, store, "urls.parquet", ["url_norm"], num_files=1)
-    compacted = spark.read.parquet(f"{store}/urls.parquet")
+    data = _flat_data_dir(spark, store, "urls.parquet")
+    compacted = spark.read.parquet(data)
     assert compacted.count() == 2
     assert "batch_id" not in compacted.columns
     assert not os.path.exists(f"{store}/batches")
-    parts = [f for f in os.listdir(f"{store}/urls.parquet") if f.startswith("part-")]
+    parts = [f for f in os.listdir(data) if f.startswith("part-")]
     assert len(parts) == 1
 
     # the screen still works against the compacted store
@@ -427,52 +443,6 @@ def test_compact_flat_store(spark, tmp_path):
 
     # compacting a missing store is a no-op, not an error
     compact_flat_store(spark, str(tmp_path / "nope"), "urls.parquet", ["url_norm"])
-
-
-def test_recover_flat_store_after_crashed_compaction(spark, tmp_path):
-    """A compaction that crashes between rename(data -> .pre-compact)
-    and rename(tmp -> data) leaves the store path ABSENT; the readers
-    must restore the parked keys instead of treating the store as
-    empty and re-accepting every previously-seen URL/hash."""
-    import os
-    import shutil
-
-    from gluestick_ts_spark.operators.dedup import (
-        compact_flat_store,
-        recover_flat_store,
-    )
-    from gluestick_ts_spark.operators.weburl import url_dedup_incremental
-
-    store = str(tmp_path / "store")
-    spark.createDataFrame(
-        [("http://a.org/x", 1), ("http://b.org/y", 2)],
-        "url_norm string, batch_id long",
-    ).write.parquet(f"{store}/urls.parquet")
-
-    # simulate the crash window: data renamed away, tmp half-written
-    shutil.move(f"{store}/urls.parquet", f"{store}/urls.parquet.pre-compact")
-    os.makedirs(f"{store}/urls.parquet.compact-tmp")
-    open(f"{store}/urls.parquet.compact-tmp/part-junk", "w").write("x")
-    assert not os.path.exists(f"{store}/urls.parquet")
-
-    assert recover_flat_store(spark, store, "urls.parquet") is True
-    assert not os.path.exists(f"{store}/urls.parquet.pre-compact")
-    assert not os.path.exists(f"{store}/urls.parquet.compact-tmp")
-    recovered = spark.read.parquet(f"{store}/urls.parquet")
-    assert recovered.count() == 2
-
-    # the screen sees the recovered keys (a.org/x is NOT re-accepted)
-    batch = spark.createDataFrame(
-        [(7, "http://a.org/x"), (8, "http://c.io/z")], "doc_id long, url string"
-    )
-    surv, _ = url_dedup_incremental(batch, recovered.drop("batch_id"))
-    assert {r.doc_id for r in surv.collect()} == {8}
-
-    # idempotent: nothing left to recover; compaction heals itself too
-    assert recover_flat_store(spark, store, "urls.parquet") is False
-    shutil.move(f"{store}/urls.parquet", f"{store}/urls.parquet.pre-compact")
-    compact_flat_store(spark, store, "urls.parquet", ["url_norm"], num_files=1)
-    assert spark.read.parquet(f"{store}/urls.parquet").count() == 2
 
 
 def test_registered_domain_psl_etld1(spark):
@@ -736,7 +706,9 @@ def test_compact_count_store(spark, tmp_path):
     compact_count_store(spark, store, "domains.parquet", ["domain"], num_files=1)
     got = {
         (r.domain, r.cnt, r.batch_id)
-        for r in spark.read.parquet(f"{store}/domains.parquet").collect()
+        for r in spark.read.parquet(
+            _flat_data_dir(spark, store, "domains.parquet")
+        ).collect()
     }
     assert got == {("a.org", 3, None), ("b.net", 3, None)}, got
     # ADDITIVE stores KEEP their replay markers: post-compaction the
@@ -749,7 +721,9 @@ def test_compact_count_store(spark, tmp_path):
     compact_count_store(spark, store, "domains.parquet", ["domain"])
     got2 = {
         (r.domain, r.cnt, r.batch_id)
-        for r in spark.read.parquet(f"{store}/domains.parquet").collect()
+        for r in spark.read.parquet(
+            _flat_data_dir(spark, store, "domains.parquet")
+        ).collect()
     }
     assert got2 == got
 
